@@ -39,7 +39,6 @@ from .operators.timeseries import (
     rolling_stats,
     time_rollup,
 )
-from .plans.extract_subtree import extract_subtree
 from .query import query
 from .sources.layout import zorder_key, zorder_layout
 from .sources.predicates import (
@@ -77,7 +76,6 @@ __all__ = [
     "check_constraints",
     "check_static_variables",
     "direct_load_plain_predicates",
-    "extract_subtree",
     "generate_plain_predicates_from_meds",
     "get_predicates_df",
     "k_core",

@@ -231,9 +231,6 @@ def _build_session(master: str | None, shuffle_partitions: str | int | None):
     if master:
         builder = builder.master(master)
     builder = builder.config("spark.sql.adaptive.enabled", "true")
-    # subset co-partitioning for the recursion's (subject_id, ts) joins
-    # over subject_id-partitioned kernels — see aces_spark/query.py
-    builder = builder.config("spark.sql.requireAllClusterKeysForCoPartition", "false")
     if shuffle_partitions:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return builder.getOrCreate()

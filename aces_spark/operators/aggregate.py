@@ -55,8 +55,21 @@ from ..types import (
 META_COLS = {"subject_id", "timestamp"}
 
 
+#: The sort key of every kernel window: ``unix_micros(timestamp)``, made a
+#: column once. In append mode it stays on the relation, so kernels stacked
+#: by the planner order by one attribute and share their sorts (Spark
+#: aliases each window's own order expression apart and re-sorts for each).
+TS_US = "__ts_us"
+
+
 def _pred_cols(df: DataFrame) -> list[str]:
     return [c for c in df.columns if c not in META_COLS]
+
+
+def _with_ts_us(df: DataFrame) -> DataFrame:
+    if TS_US in df.columns:
+        return df
+    return df.withColumn(TS_US, F.unix_micros(F.col("timestamp")))
 
 
 def aggregate_temporal_window(
@@ -76,8 +89,8 @@ def aggregate_temporal_window(
     ``aggregate.py:305-313``).
 
     ``append=True`` keeps every input column and ADDS the outputs under
-    ``{prefix}{name}`` instead — the fused linear-chain planner
-    (``plans/fused.py``) stacks several window nodes onto one relation this
+    ``{prefix}{name}`` instead — the window-tree planner
+    (``plans/fused.py``) stacks every window node onto one relation this
     way, all sharing the single subject_id partitioning (zero joins).
     ``value_cols`` restricts which columns are summed (default: every
     non-meta column — only valid when the frame carries nothing else).
@@ -91,7 +104,8 @@ def aggregate_temporal_window(
 
     pred_cols = value_cols if value_cols is not None else _pred_cols(predicates_df)
     lo, hi = endpoint_expr.spark_range_bounds
-    ts_us = F.unix_micros(F.col("timestamp"))
+    predicates_df = _with_ts_us(predicates_df)
+    ts_us = F.col(TS_US)
     off_us = td_to_us(endpoint_expr.offset)
     ws_us = td_to_us(endpoint_expr.window_size)
 
@@ -247,6 +261,7 @@ def boolean_expr_bound_sum(
     prefix: str = "",
     append: bool = False,
     value_cols: list[str] | None = None,
+    carry: dict[str, Column] | None = None,
 ) -> DataFrame:
     """Sum all predicate columns between each row (± ``offset``) and the
     nearest per-subject boundary row (reference
@@ -277,9 +292,15 @@ def boolean_expr_bound_sum(
        (ref ``:1085-1092``).
 
     ``prefix``/``append``/``value_cols`` behave as in
-    :func:`aggregate_temporal_window` (fused-planner support: outputs — and
+    :func:`aggregate_temporal_window` (planner support: outputs — and
     all internal temp columns — are namespaced so several kernel
     applications can stack on one relation).
+
+    ``carry`` maps output names to columns that are copied from each row's
+    boundary row, through the same fill frame as the window timestamps
+    (null where no boundary qualifies). Each carried column must be non-null
+    on every boundary row, or the fill skips to an older boundary; the
+    planner carries a ``struct``, which never is.
     """
     if mode not in ("bound_to_row", "row_to_bound"):
         raise ValueError(f"Mode '{mode}' invalid!")
@@ -291,7 +312,8 @@ def boolean_expr_bound_sum(
     tp = f"__{prefix}" if prefix else "__"  # temp-column namespace
 
     w_subj = Window.partitionBy("subject_id")
-    ts_us = F.unix_micros(F.col("timestamp"))
+    df = _with_ts_us(df)
+    ts_us = F.col(TS_US)
     off_us = td_to_us(offset)
 
     # --- step 5 prep: offset-interval temporal sums, inline (ref :969-995) ---
@@ -330,10 +352,12 @@ def boolean_expr_bound_sum(
     # Spark evaluates growing frames incrementally but re-scans the
     # remaining partition per row for shrinking ones — O(n) vs O(n²) per
     # subject, which is the difference between a skewed 100k-event subject
-    # finishing in milliseconds and stalling its whole task.
+    # finishing in milliseconds and stalling its whole task. The negated key
+    # is the shared sort column in descending order: Spark flips the sign
+    # of range offsets for a descending key.
     sign, fill_bound, exclude_boundary_counts = _fill_spec(mode, closed, off_us)
-    fill_key = ts_us if sign == 1 else (-ts_us)
-    w_fill = w_subj.orderBy(fill_key.asc()).rangeBetween(Window.unboundedPreceding, fill_bound)
+    fill_key = ts_us.asc() if sign == 1 else ts_us.desc()
+    w_fill = w_subj.orderBy(fill_key).rangeBetween(Window.unboundedPreceding, fill_bound)
 
     def fill(col: Column) -> Column:
         return F.last(col, ignorenulls=True).over(w_fill)
@@ -346,16 +370,18 @@ def boolean_expr_bound_sum(
             val = val - F.col(c)
         return F.when(F.col(f"{tp}bexpr"), val)
 
+    carry = carry or {}
     fill_cols = {
         f"{tp}ts_at_boundary": fill(bnd_ts),
         **{f"{tp}bcum_{c}": fill(bnd_cum(c)) for c in pred_cols},
+        **{name: fill(F.when(F.col(f"{tp}bexpr"), col)) for name, col in carry.items()},
     }
     filled = base.withColumns(fill_cols)
 
     out_cols = _event_bound_outputs(pred_cols, mode, closed, offset, tp, prefix)
     if append:
-        return filled.select(*df.columns, *out_cols)
-    return filled.select("subject_id", "timestamp", *out_cols)
+        return filled.select(*df.columns, *out_cols, *carry)
+    return filled.select("subject_id", "timestamp", *out_cols, *carry)
 
 
 def aggregate_event_bound_window(

@@ -17,25 +17,19 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..types import ANY_EVENT_COLUMN
 
 
-def check_constraints(
-    window_constraints: dict[str, tuple[int | None, int | None]],
-    summary_df: DataFrame,
-) -> DataFrame:
-    """Filter rows whose predicate counts fall outside any constraint's
-    inclusive ``(min, max)`` range; ``None`` endpoints are unbounded and
-    ``"*"`` aliases the any-event column (reference
-    ``src/aces/constraints.py:95-119``).
-
-    Unlike the reference, no per-constraint row counts are materialized
-    (those would be eager actions on a 100 TB input); exclusion counts are
-    observable via the Spark UI instead.
-    """
+def constraints_hold(
+    window_constraints: dict[str, tuple[int | None, int | None]], prefix: str = ""
+) -> Column:
+    """True where every predicate count (column ``{prefix}{name}``) lies in
+    its constraint's inclusive ``(min, max)`` range; ``None`` endpoints are
+    unbounded and ``"*"`` aliases the any-event column (reference
+    ``src/aces/constraints.py:95-119``)."""
     should_drop = F.lit(False)
 
     for col, (valid_min_inc, valid_max_inc) in window_constraints.items():
@@ -47,15 +41,26 @@ def check_constraints(
         if col == "*":
             col = ANY_EVENT_COLUMN
 
-        drop_expr = F.lit(False)
         if valid_min_inc is not None:
-            drop_expr = drop_expr | (F.col(col) < valid_min_inc)
+            should_drop = should_drop | (F.col(f"{prefix}{col}") < valid_min_inc)
         if valid_max_inc is not None:
-            drop_expr = drop_expr | (F.col(col) > valid_max_inc)
+            should_drop = should_drop | (F.col(f"{prefix}{col}") > valid_max_inc)
 
-        should_drop = should_drop | drop_expr
+    return ~should_drop
 
-    return summary_df.filter(~should_drop)
+
+def check_constraints(
+    window_constraints: dict[str, tuple[int | None, int | None]],
+    summary_df: DataFrame,
+) -> DataFrame:
+    """Filter rows whose predicate counts fall outside any constraint's
+    range (see :func:`constraints_hold`).
+
+    Unlike the reference, no per-constraint row counts are materialized
+    (those would be eager actions on a 100 TB input); exclusion counts are
+    observable via the Spark UI instead.
+    """
+    return summary_df.filter(constraints_hold(window_constraints))
 
 
 def check_static_variables(patient_demographics: list[str], predicates_df: DataFrame) -> DataFrame:

@@ -1,217 +1,165 @@
-"""Fused window-tree planner: join-free evaluation for anchor-stable trees.
+"""Window-tree planner: any task tree evaluated as one windowed scan.
 
-Spark-first optimization with no counterpart in the reference (its recursion
-always materializes + joins per edge, ``src/aces/extract_subtree.py:279-386``).
+The reference evaluates the tree recursively, materializing and joining
+anchor sets at every edge (``src/aces/extract_subtree.py:279-386``). Here
+the whole tree runs bottom-up on the one ``subject_id``-partitioned
+predicates relation, with every node's result kept as columns of the event
+row it is anchored at:
 
-Key observation: a temporal edge keeps the child anchored on the SAME event
-row (``extract_subtree.py:300-310`` — child anchor = row timestamp), so in a
-tree where every *internal* edge is temporal (event-bound edges only at
-leaves), every node's window summary is indexed by the original event row.
-The whole recursion then collapses into ONE windowed scan:
+* a **temporal edge** keeps the child anchored on the same row; its offset
+  accumulates into the child's edges (ref ``:300-310``);
+* an **event-bound edge** anchors the child at the boundary row the kernel
+  resolves (ref ``:311-327``). The child's subtree is first evaluated at
+  every row, packed into one struct (validity, junk flag, every descendant's
+  summary), and the event-bound kernel copies that struct from the boundary
+  row onto the parent row through the same ``last(…, ignorenulls)`` fill
+  that yields the boundary timestamp. The "hop" reads the boundary row's
+  precomputed result instead of joining to it;
+* the reference's anchor joins become row-wise validity flags: the trigger,
+  each edge's count constraints, a resolved boundary on every event-bound
+  edge, and the conjunction over siblings.
 
-* each node's window sums/timestamps are appended as prefixed columns
-  (kernels in append mode — same ``subject_id`` hash partitioning, shared
-  sorts, zero shuffles beyond the input's single exchange);
-* anchor-set joins (J1) become row-wise validity flags (trigger ≥ 1 AND
-  each node's constraint check AND, for event-bound leaves, a resolved
-  boundary);
-* sibling-intersection joins (J4) become conjunction of the leaf flags;
-* child→parent remap joins (J2/J3) vanish — the anchor never moves.
+Junk rows. A pure single-child chain whose event-bound leaf finds no
+boundary makes the reference emit one ``(subject, null)`` row per subject
+with null summaries (its null child anchor survives the left joins back up
+the chain but never matches an inner join). Each row carries a junk flag
+for that case; the first flagged row per subject (the one at the subject's
+minimum flagged timestamp, a whole-subject window in the same scan) is
+kept and its anchor and summaries projected to null.
 
-This preserves the general path's exact semantics, including the junk row it
-emits per subject when a pure single-child chain ends in an event-bound leaf
-with no qualifying boundary (the reference's null-key join behavior: the
-realization is replaced by one ``(subject, null)`` row with null summaries).
-Verified by differential tests (``tests/test_fused.py``) against the general
-planner across random trees/frames.
-
-At scale this is the difference between kernel-bound throughput (~3M rows/s
-per 32 cores) and join-bound throughput (~0.3M rows/s) on dense-trigger
-tasks — see ``tools/scale_probe.py``.
+The plan is one hash exchange on ``subject_id`` followed by window
+operators: no join, no union, no cache.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import itertools
 from datetime import timedelta
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.aggregate import aggregate_temporal_window, boolean_expr_bound_sum
-from ..types import ANY_EVENT_COLUMN, TemporalWindowBounds
-from ..utils import Node, preorder_iter
+from ..operators.constraints import constraints_hold
+from ..types import TemporalWindowBounds
+from ..utils import Node
 
 ANCHOR = "subtree_anchor_timestamp"
 
 
 def can_fuse(tree: Node) -> bool:
-    """A tree fuses iff every edge to a non-leaf child is temporal — i.e.
-    anchors never move off the original event row mid-tree."""
-    for node in preorder_iter(tree):
-        for child in node.children:
-            if child.children and not isinstance(child.endpoint_expr, TemporalWindowBounds):
-                return False
+    """Every window tree plans as one windowed scan; kept for callers that
+    report which planner ran."""
     return True
 
 
-def _constraint_keep(
-    constraints: dict[str, tuple[int | None, int | None]], prefix: str
-) -> Column:
-    """Row-wise equivalent of ``check_constraints`` over prefixed sum
-    columns (same validation, same ``"*"`` alias)."""
-    should_drop = F.lit(False)
-    for col, (mn, mx) in constraints.items():
-        if (mn is None and mx is None) or (mn is not None and mx is not None and mx < mn):
-            raise ValueError(f"Invalid constraint for '{col}': {mn} - {mx}")
-        if col == "*":
-            col = ANY_EVENT_COLUMN
-        drop = F.lit(False)
-        if mn is not None:
-            drop = drop | (F.col(f"{prefix}{col}") < mn)
-        if mx is not None:
-            drop = drop | (F.col(f"{prefix}{col}") > mx)
-        should_drop = should_drop | drop
-    return ~should_drop
+@dataclasses.dataclass
+class _Result:
+    """A subtree anchored at each row: whether every edge below holds,
+    whether anchoring here yields the junk row (``None``: it never can),
+    and ``(node name, summary struct)`` for every descendant in pre-order."""
+
+    valid: Column
+    junk: Column | None
+    summaries: list[tuple[str, Column]]
+
+    def pack(self) -> Column:
+        """One struct, non-null on every row: the hop's fill skips nulls,
+        so a null here would let it reach past the nearest boundary."""
+        junk = F.lit(False) if self.junk is None else self.junk
+        return F.struct(
+            F.coalesce(self.valid, F.lit(False)).alias("valid"),
+            F.coalesce(junk, F.lit(False)).alias("junk"),
+            *[s.alias(f"s{i}") for i, (_, s) in enumerate(self.summaries)],
+        )
+
+    def unpack(self, packed: Column) -> _Result:
+        """This result, read from a copy of :meth:`pack` on another row."""
+        return _Result(
+            packed["valid"],
+            None if self.junk is None else packed["junk"],
+            [(name, packed[f"s{i}"]) for i, (name, _) in enumerate(self.summaries)],
+        )
 
 
-def fusible_without_junk(tree: Node) -> bool:
-    """Fuse-eligible AND free of the chain-censoring junk-row case — the
-    shape where a fused subtree can substitute for the general recursion
-    mid-tree (its result is then inner-joined to the anchor set once,
-    which would wrongly drop junk rows if any were emitted)."""
-    if not can_fuse(tree):
-        return False
-    if not _is_chain(tree):
-        return True
-    node = tree
-    while node.children:
-        node = node.children[0]
-    return isinstance(node.endpoint_expr, TemporalWindowBounds)
+def extract_tree(tree: Node, predicates_df: DataFrame, root_valid: Column) -> DataFrame:
+    """Evaluate the window tree rooted at ``tree`` in one windowed scan.
 
-
-def extract_subtree_fused(
-    subtree: Node,
-    predicates_df: DataFrame,
-    root_valid: Column,
-    initial_offset: timedelta = timedelta(0),
-) -> DataFrame:
-    """Evaluate a fuse-eligible window tree in one windowed pipeline.
-
-    Returns the same shape as the general ``extract_subtree`` after anchor
-    selection: ``(subject_id, subtree_anchor_timestamp, {node}_summary...)``
-    with one row per valid trigger realization. ``initial_offset`` folds an
-    accumulated parent offset in when a subtree is fused mid-recursion.
+    Returns ``(subject_id, subtree_anchor_timestamp, {node}_summary...)``
+    with one row per trigger realization (``root_valid`` holds and every
+    edge realizes), plus the junk row described in the module docstring.
+    Summary structs hold ``window_name``, ``timestamp_at_start``,
+    ``timestamp_at_end`` and every predicate count (reference
+    ``src/aces/extract_subtree.py:366-375``).
     """
     pred_cols = [c for c in predicates_df.columns if c not in ("subject_id", "timestamp")]
+    df = predicates_df
+    ids = itertools.count(1)
 
-    if not subtree.children:
-        return predicates_df.filter(root_valid).select(
-            "subject_id", F.col("timestamp").alias(ANCHOR)
-        )
-
-    df = predicates_df.withColumn("__valid_root", root_valid)
-
-    node_info: list[tuple[Node, str]] = []  # (node, prefix) in walk order
-    leaf_valid_cols: list[str] = []
-    junk_cond: Column | None = None  # pure-chain + event-bound-leaf censoring
-    counter = 0
-
-    def walk(node: Node, offset: timedelta, parent_valid: str) -> None:
-        nonlocal df, counter, junk_cond
+    def subtree(node: Node, offset: timedelta) -> _Result:
+        nonlocal df
+        valid, junk, summaries = F.lit(True), None, []
         for child in node.children:
-            counter += 1
-            pfx = f"__n{counter}_"
-            eff = dataclasses.replace(
+            pfx = f"__n{next(ids)}_"
+            # fold the accumulated offset into a copy: the config's own
+            # bounds are never mutated (ref :292-298)
+            bounds = dataclasses.replace(
                 child.endpoint_expr, offset=child.endpoint_expr.offset + offset
             )
-            boundary_null: Column | None = None
-            if isinstance(eff, TemporalWindowBounds):
+            if isinstance(bounds, TemporalWindowBounds):
                 df = aggregate_temporal_window(
-                    df, eff, prefix=pfx, append=True, value_cols=pred_cols
+                    df, bounds, prefix=pfx, append=True, value_cols=pred_cols
                 )
-                child_offset = offset + eff.window_size
+                hop_ok, below = F.lit(True), subtree(child, offset + bounds.window_size)
             else:
-                kw = eff.bound_sum_kwargs
+                at_row = subtree(child, timedelta(0)) if child.children else None
+                kw = bounds.bound_sum_kwargs
                 df = boolean_expr_bound_sum(
-                    df,
-                    kw["boundary"],
-                    kw["mode"],
-                    kw["closed"],
-                    kw["offset"],
-                    prefix=pfx,
-                    append=True,
-                    value_cols=pred_cols,
+                    df, kw["boundary"], kw["mode"], kw["closed"], kw["offset"],
+                    prefix=pfx, append=True, value_cols=pred_cols,
+                    carry={} if at_row is None else {f"{pfx}hop": at_row.pack()},
                 )
-                bnd_side = (
-                    "timestamp_at_start" if kw["mode"] == "bound_to_row" else "timestamp_at_end"
-                )
-                boundary_null = F.col(f"{pfx}{bnd_side}").isNull()
-                child_offset = timedelta(0)
+                side = "start" if kw["mode"] == "bound_to_row" else "end"
+                resolved = F.col(f"{pfx}timestamp_at_{side}").isNotNull()
+                if at_row is None:
+                    # an unresolved leaf boundary is where the junk row comes from
+                    hop_ok, below = F.lit(True), _Result(resolved, ~resolved, [])
+                else:
+                    # the child is anchored at the boundary row: read its
+                    # subtree from there
+                    hop_ok, below = resolved, at_row.unpack(F.col(f"{pfx}hop"))
+            gate = constraints_hold(child.constraints, pfx) & hop_ok
+            valid = valid & gate & below.valid
+            junk = None if below.junk is None else gate & below.junk
+            summaries.append((child.name, _summary(child.name, pfx, pred_cols)))
+            summaries += below.summaries
+        return _Result(valid, junk if len(node.children) == 1 else None, summaries)
 
-            keep = _constraint_keep(child.constraints, pfx)
-            valid = F.col(parent_valid) & keep
-            if boundary_null is not None:
-                # the general path drops anchors whose boundary is unresolved
-                # (their null child anchor never re-joins); see module doc
-                valid = valid & ~boundary_null
-                if len(node.children) == 1 and junk_cond is None and _is_chain(subtree):
-                    junk_cond = F.col(parent_valid) & keep & boundary_null
-            vcol = f"{pfx}valid"
-            df = df.withColumn(vcol, valid)
-            node_info.append((child, pfx))
-            if child.children:
-                walk(child, child_offset, vcol)
-            else:
-                leaf_valid_cols.append(vcol)
-
-    walk(subtree, initial_offset, "__valid_root")
-
-    all_valid = F.col(leaf_valid_cols[0])
-    for vc in leaf_valid_cols[1:]:
-        all_valid = all_valid & F.col(vc)
-
-    struct_cols = []
-    for child, pfx in node_info:
-        struct_cols.append(
-            F.struct(
-                F.lit(child.name).alias("window_name"),
-                F.col(f"{pfx}timestamp_at_start").alias("timestamp_at_start"),
-                F.col(f"{pfx}timestamp_at_end").alias("timestamp_at_end"),
-                *[F.col(f"{pfx}{c}").alias(c) for c in pred_cols],
-            ).alias(f"{child.name}_summary")
+    result = subtree(tree, timedelta(0))
+    trigger = F.coalesce(root_valid, F.lit(False))
+    df = df.withColumn("__valid", trigger & result.valid)
+    keep = F.col("__valid")
+    if result.junk is not None:
+        # the subject's first junk row; a whole-subject frame needs no sort
+        # beyond the subject_id clustering every kernel already has
+        junk_ts = F.when(trigger & F.coalesce(result.junk, F.lit(False)), F.col("timestamp"))
+        df = df.withColumn(
+            "__first_junk",
+            F.col("timestamp") == F.min(junk_ts).over(Window.partitionBy("subject_id")),
         )
-
-    result = df.filter(F.coalesce(all_valid, F.lit(False))).select(
-        "subject_id", F.col("timestamp").alias(ANCHOR), *struct_cols
+        keep = keep | F.coalesce(F.col("__first_junk"), F.lit(False))
+    return df.filter(keep).select(
+        "subject_id",
+        F.when(F.col("__valid"), F.col("timestamp")).alias(ANCHOR),
+        *[F.when(F.col("__valid"), s).alias(f"{name}_summary") for name, s in result.summaries],
     )
 
-    if junk_cond is not None:
-        struct_types = {
-            f.name: f.dataType for f in result.schema.fields if f.name.endswith("_summary")
-        }
-        junk = (
-            df.filter(F.coalesce(junk_cond, F.lit(False)))
-            .select("subject_id")
-            .distinct()
-            .select(
-                "subject_id",
-                F.lit(None).cast("timestamp").alias(ANCHOR),
-                *[
-                    F.lit(None).cast(dt).alias(name)
-                    for name, dt in struct_types.items()
-                ],
-            )
-        )
-        result = result.unionByName(junk)
 
-    return result
-
-
-def _is_chain(tree: Node) -> bool:
-    node = tree
-    while node.children:
-        if len(node.children) != 1:
-            return False
-        node = node.children[0]
-    return True
+def _summary(name: str, pfx: str, pred_cols: list[str]) -> Column:
+    return F.struct(
+        F.lit(name).alias("window_name"),
+        F.col(f"{pfx}timestamp_at_start").alias("timestamp_at_start"),
+        F.col(f"{pfx}timestamp_at_end").alias("timestamp_at_end"),
+        *[F.col(f"{pfx}{c}").alias(c) for c in pred_cols],
+    )

@@ -3,23 +3,22 @@
 ``query(cfg, predicates_df)`` runs the full pipeline lazily:
 
 1. validate ``(subject_id, timestamp)`` uniqueness (the reference always
-   does, ``query.py:110-115``; here the default is ``"auto"`` — run the
-   eager check when Catalyst's size estimate for the input is below a
-   threshold, skip with a logged notice above it, since the check is a
-   full aggregation pass over a 100 TB input);
+   does, ``query.py:110-115``; here the default is ``"auto"`` — skip it for
+   frames whose loader collapsed events, run the eager check when
+   Catalyst's size estimate for the input is below a threshold, skip with a
+   logged notice above it, since the check is a full aggregation pass over
+   a 100 TB input);
 2. static/demographic filter OR drop null-timestamp rows
    (``query.py:121-127``);
-3. trigger anchors via the count-constraint filter (``query.py:133-140``);
-4. recursive window-tree evaluation;
-5. rename the anchor to ``trigger``; extract ``label`` /
+3. trigger anchors and the whole window tree in one windowed scan over the
+   ``subject_id``-partitioned frame (``plans/fused.py``);
+4. rename the anchor to ``trigger``; extract ``label`` /
    ``index_timestamp`` from their windows' struct summaries
    (``query.py:153-196``);
-6. project output columns in window-tree pre-order (``query.py:155-159``).
+5. project output columns in window-tree pre-order (``query.py:155-159``).
 
-Physical plan choices: the predicates DataFrame is cached before the
-recursion (every tree edge re-reads it — the reference reuses its eager
-in-memory frame the same way), and the trigger-anchor set is the most
-selective relation in the plan, so it is joined first at every level.
+Nothing is cached and no session conf is touched: the plan is one hash
+exchange on ``subject_id`` followed by window operators.
 """
 
 from __future__ import annotations
@@ -30,9 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import TaskExtractorConfig
-from .operators.constraints import check_constraints, check_static_variables
-from .plans.extract_subtree import extract_subtree
-from .plans.fused import can_fuse, extract_subtree_fused
+from .operators.constraints import check_static_variables
+from .plans.fused import ANCHOR, extract_tree
 from .utils import preorder_iter
 
 logger = logging.getLogger(__name__)
@@ -71,9 +69,6 @@ def query(
     cfg: TaskExtractorConfig,
     predicates_df: DataFrame,
     validate_uniqueness: bool | str = "auto",
-    cache: bool = True,
-    checkpoint: bool = False,
-    fused: bool | None = None,
 ) -> DataFrame:
     """Extract the cohort realizations for ``cfg`` from ``predicates_df``.
 
@@ -121,59 +116,8 @@ def query(
             F.col("subject_id").isNotNull() & F.col("timestamp").isNotNull()
         )
 
-    # Subset co-partitioning (r10, deep-tree exchange profile in
-    # COVERAGE.md): the recursion's joins key on (subject_id, <anchor
-    # ts>) while every window kernel partitions on subject_id alone.
-    # With Spark's default requireAllClusterKeysForCoPartition=true a
-    # hash(subject_id) side never satisfies a (subject_id, ts) join and
-    # BOTH sides re-shuffle around every tree edge; relaxing it lets
-    # the planner accept matching subject_id-only partitionings —
-    # correctness-neutral (same-key rows still co-locate under any key
-    # subset), and subject_id is the high-cardinality key so no
-    # parallelism is lost. Measured on the 5-window HF readmission
-    # shape at 2M rows/5k subjects: 22.7 s -> 19.0 s median, identical
-    # cohort. Dynamic conf, safe to set per-session.
-    try:
-        predicates_df.sparkSession.conf.set(
-            "spark.sql.requireAllClusterKeysForCoPartition", "false"
-        )
-    except Exception:  # pragma: no cover - conf may be static on some builds
-        pass
-
-    use_fused = can_fuse(cfg.window_tree) if fused is None else fused
-    if use_fused:
-        # anchor-stable tree (all internal edges temporal): evaluate as ONE
-        # windowed pipeline with zero joins and no cache — see plans/fused.py
-        result = extract_subtree_fused(
-            cfg.window_tree, predicates_df, F.col(cfg.trigger.predicate) >= 1
-        )
-    else:
-        if cache:
-            # the recursion re-reads this frame at every tree edge through
-            # the cache; without this conf AQE treats the cached plan's
-            # output partitioning as unknown and re-shuffles the FULL frame
-            # once per window kernel (3 redundant exchanges on the flagship
-            # task, ~2× wall). Dynamic conf, safe to set per-session.
-            try:
-                predicates_df.sparkSession.conf.set(
-                    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-                )
-            except Exception:  # pragma: no cover - conf may be static on some builds
-                pass
-            predicates_df = predicates_df.cache()
-
-        prospective_root_anchors = check_constraints(
-            {cfg.trigger.predicate: (1, None)}, predicates_df
-        ).select("subject_id", F.col("timestamp").alias("subtree_anchor_timestamp"))
-
-        result = extract_subtree(
-            cfg.window_tree, prospective_root_anchors, predicates_df, checkpoint=checkpoint,
-            # an explicit fused=False means "pure general path" (the
-            # differential tests rely on the two planners being independent)
-            subtree_fusion=fused is None,
-        )
-
-    result = result.withColumnRenamed("subtree_anchor_timestamp", "trigger")
+    result = extract_tree(cfg.window_tree, predicates_df, F.col(cfg.trigger.predicate) >= 1)
+    result = result.withColumnRenamed(ANCHOR, "trigger")
 
     to_return_cols = [
         "subject_id",

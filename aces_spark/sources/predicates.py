@@ -96,12 +96,15 @@ def direct_load_plain_predicates(
     # and every downstream window/groupBy/join is keyed by subject_id, so
     # no further shuffle is ever required (SURVEY §4: "embarrassingly
     # parallel by subject").
-    return (
+    out = (
         data.withColumn("subject_id", F.col("subject_id").cast("long"))
         .repartition("subject_id")
         .groupBy("subject_id", "timestamp")
         .agg(*[F.sum(F.col(c)).cast(PRED_CNT_TYPE).alias(c) for c in predicates])
     )
+    # unique keys by construction (the collapse), as for MEDS below
+    out._aces_keys_unique = True
+    return out
 
 
 #: lenient English day-name token (``Mon``/``Monday``/…, any case) used to
@@ -422,6 +425,9 @@ def get_predicates_df(
             raise ValueError(
                 f"Invalid data standard: {standard}. Options are 'direct', 'MEDS', 'ESGPT'."
             )
+    # the MEDS and direct loaders collapse events with groupBy(subject_id,
+    # timestamp); ESGPT events are not collapsed, so query() must check them
+    keys_unique = getattr(data, "_aces_keys_unique", False)
 
     w_subj = Window.partitionBy("subject_id")
     # deterministic "first row" per subject = null-timestamp row first, then
@@ -474,8 +480,7 @@ def get_predicates_df(
             (F.col("timestamp") == F.max("timestamp").over(w_subj)).cast(PRED_CNT_TYPE),
         )
 
-    # every loader collapses events with groupBy(subject_id, timestamp), so
-    # the keys are unique BY CONSTRUCTION — tag the frame so query()'s
-    # default-on uniqueness validation skips the redundant aggregation pass
-    data._aces_keys_unique = True
+    # the tag lets query()'s default-on uniqueness validation skip a
+    # redundant aggregation pass; withColumn returned new frames, so re-tag
+    data._aces_keys_unique = keys_unique
     return data

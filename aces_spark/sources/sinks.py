@@ -74,15 +74,22 @@ def write_result(
     """Write the cohort result as parquet; optionally as MEDS labels with
     the raw window-struct frame persisted separately
     (reference ``src/aces/run.py:161-167``)."""
+    # MEDS timestamps are μs; Spark's default INT96 reads back as nanos.
+    # The caller's setting is restored afterwards.
+    conf = result.sparkSession.conf
+    key = "spark.sql.parquet.outputTimestampType"
+    previous = conf.get(key, None)
+    conf.set(key, "TIMESTAMP_MICROS")
     try:
-        # MEDS timestamps are μs; Spark's default INT96 reads back as nanos
-        result.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    except Exception:  # pragma: no cover
-        pass
-    if window_stats_path:
-        result.write.mode(mode).parquet(window_stats_path)
-    out = to_meds_labels(result) if meds_labels else result
-    out.write.mode(mode).parquet(output_path)
+        if window_stats_path:
+            result.write.mode(mode).parquet(window_stats_path)
+        out = to_meds_labels(result) if meds_labels else result
+        out.write.mode(mode).parquet(output_path)
+    finally:
+        if previous is None:
+            conf.unset(key)
+        else:
+            conf.set(key, previous)
 
 
 def read_jsonl(

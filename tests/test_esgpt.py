@@ -214,3 +214,30 @@ def test_esgpt_end_to_end_query(spark, tmp_path):
     )
     result_static = query(cfg_static, pred_df_static).collect()
     assert [(r.subject_id, r.trigger) for r in result_static] == [(1, DT(2021, 1, 1, 0, 0))]
+
+
+def test_esgpt_duplicate_event_keys_rejected(spark, tmp_path):
+    """ESGPT events are not collapsed per (subject_id, timestamp), so two
+    events at one key reach query(), which must reject them like the
+    reference's mandatory uniqueness check."""
+    subjects, events, measurements = _esgpt_tables(spark)
+    dup = spark.createDataFrame(
+        [(6, 1, DT(2021, 1, 1, 0, 0), "dis", 30)],
+        "event_id long, subject_id long, timestamp timestamp, event_type string, age long",
+    )
+    subjects.write.parquet(str(tmp_path / "subjects_df.parquet"))
+    events.unionByName(dup).write.parquet(str(tmp_path / "events_df.parquet"))
+    measurements.write.parquet(str(tmp_path / "dynamic_measurements_df.parquet"))
+    cfg = TaskExtractorConfig(
+        predicates={k: v for k, v in PREDICATES.items() if not v.static},
+        trigger=EventConfig("is_adm"),
+        windows={
+            "obs": WindowConfig(
+                start="trigger", end="start + 24h", start_inclusive=True, end_inclusive=True
+            )
+        },
+    )
+    pred_df = get_predicates_df(cfg, spark, tmp_path, standard="esgpt", value_columns=VALUE_COLUMNS)
+    assert not getattr(pred_df, "_aces_keys_unique", False)
+    with pytest.raises(ValueError, match="must be unique"):
+        query(cfg, pred_df)

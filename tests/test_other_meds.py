@@ -282,35 +282,3 @@ def test_other_meds_nested_preds_readmission(spark, meds_dir, tmp_path):
         (3, datetime(2024, 4, 19, 13, 32), False),
     ]
     assert got == want, f"got {got}"
-
-
-def test_copartition_relaxation_differential(spark, meds_dir, tmp_path):
-    """query() relaxes spark.sql.requireAllClusterKeysForCoPartition so
-    the recursion's (subject_id, ts) joins accept the kernels'
-    hash(subject_id) partitioning (r10 deep-tree exchange work). The
-    setting is planner-only; strict and relaxed planning must produce
-    the identical cohort on the hardest recursion shape."""
-    relaxed = _run(spark, meds_dir, HF_READMISSION_CFG, tmp_path)
-    assert (
-        spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition") == "false"
-    )
-
-    from pyspark.sql.conf import RuntimeConfig
-
-    orig = RuntimeConfig.set
-
-    def strict_set(self, key, value):
-        if key == "spark.sql.requireAllClusterKeysForCoPartition":
-            value = "true"
-        return orig(self, key, value)
-
-    mp = pytest.MonkeyPatch()
-    try:
-        mp.setattr(RuntimeConfig, "set", strict_set)
-        spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "true")
-        strict = _run(spark, meds_dir, HF_READMISSION_CFG, tmp_path)
-    finally:
-        mp.undo()
-        spark.conf.unset("spark.sql.requireAllClusterKeysForCoPartition")
-
-    assert relaxed == strict

@@ -508,9 +508,8 @@ def meds_path(tmp_path_factory):
     return path
 
 
-@pytest.mark.parametrize("fused", [True, False], ids=["fused", "general"])
 @pytest.mark.parametrize("task", list(CONFIGS))
-def test_sample_config_vs_brute_force(spark, tmp_path, meds_path, task, fused):
+def test_sample_config_vs_brute_force(spark, tmp_path, meds_path, task):
     cfg_path = tmp_path / f"{task}.yaml"
     cfg_path.write_text(CONFIGS[task])
     cfg = TaskExtractorConfig.load(cfg_path)
@@ -518,7 +517,7 @@ def test_sample_config_vs_brute_force(spark, tmp_path, meds_path, task, fused):
     cols, node_names, want = brute_query(cfg, make_meds_rows())
     pred_df = get_predicates_df(cfg, spark, meds_path, standard="meds")
     assert [c for c in pred_df.columns if c not in ("subject_id", "timestamp")] == cols
-    got = engine_rows(cfg, query(cfg, pred_df, fused=fused).collect(), cols, node_names)
+    got = engine_rows(cfg, query(cfg, pred_df).collect(), cols, node_names)
 
     assert len(got) > 0, f"{task}: engine produced no realizations — fixture too sparse"
     assert got == want
@@ -526,7 +525,7 @@ def test_sample_config_vs_brute_force(spark, tmp_path, meds_path, task, fused):
 
 def test_query_idempotency(spark, tmp_path, meds_path):
     """Repeated query() calls over the same config object must agree — guards
-    in-place offset mutation in the recursion (reference regression
+    in-place offset mutation in the planner (reference regression
     ``tests/test_extract_subtree_idempotency.py``)."""
     cfg_path = tmp_path / "imminent.yaml"
     cfg_path.write_text(IMMINENT_MORTALITY)

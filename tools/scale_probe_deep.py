@@ -7,12 +7,10 @@ tests/test_other_meds.py): a BACKWARD event-bound window
 (``end <- admission``), a cross-window reference chain
 (``data_within_5yr_of_admit.end → admission_is_HF.start``), an
 unbounded-start input window, a forward target with a label, and an
-unbounded-end censor-protection window — 5 levels of extract-subtree
-recursion. This probe runs THAT exact task config over a synthetic
-20M-row / 50k-subject predicates frame and records rows/s plus the
-lineage/checkpoint shape of the final plan (exchange count + truncated
-ExistingRDD scan count), so the recursion-depth risk is measured, not
-argued.
+unbounded-end censor-protection window, with an event-bound hop mid-tree.
+This probe runs THAT exact task config over a synthetic 20M-row /
+50k-subject predicates frame and records rows/s plus the shape of the
+final plan (exchange count + checkpointed ExistingRDD scan count).
 
 Usage: python tools/scale_probe_deep.py [n_rows] [n_subjects]
 Prints one JSON line.
@@ -94,7 +92,7 @@ def main() -> int:
         # set BEFORE the probe's persist so the InMemoryRelation keeps
         # its hash(subject_id) output partitioning visible to consumers
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", __import__("bench").driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
@@ -155,9 +153,8 @@ def main() -> int:
 
     sec, lo, hi = timed(lambda: query(cfg, df))
 
-    # lineage/checkpoint shape of the 5-level recursion: exchanges in the
-    # optimized plan, plus how many branches were truncated to an
-    # ExistingRDD scan by the plan-reuse checkpoints
+    # plan shape of the 5-window tree: exchanges in the executed plan, and
+    # ExistingRDD scans (checkpointed branches; none expected)
     result = query(cfg, df)
     plan = result._jdf.queryExecution().executedPlan().toString()
     cohort_rows = result.count()
