@@ -247,26 +247,26 @@ def _run_extraction(
     meds_labels: bool,
     window_stats_path: str | None,
 ) -> None:
+    from pyspark.sql import Observation
+
     from .config import TaskExtractorConfig
-    from .query import query, report_cohort_stats
+    from .query import cohort_stats_aggs, log_cohort_stats, query
     from .sources.predicates import get_predicates_df
     from .sources.sinks import write_result
 
     cfg = TaskExtractorConfig.load(config_path, predicates_path)
     predicates_df = get_predicates_df(cfg, spark, data_path, standard=standard, ts_format=ts_format)
-    # persist so the sanity report reuses the written result instead of
-    # re-running the whole extraction
-    result = query(cfg, predicates_df).persist()
-    try:
-        write_result(
-            result,
-            output_path,
-            meds_labels=meds_labels,
-            window_stats_path=window_stats_path,
-        )
-        report_cohort_stats(result)
-    finally:
-        result.unpersist()
+    # the sanity report is observed on the write's own job: nothing is
+    # cached and no second job runs
+    stats = Observation()
+    result = query(cfg, predicates_df).observe(stats, *cohort_stats_aggs(bool(cfg.label_window)))
+    write_result(
+        result,
+        output_path,
+        meds_labels=meds_labels,
+        window_stats_path=window_stats_path,
+    )
+    log_cohort_stats(stats.get)
 
 
 def build_parser() -> argparse.ArgumentParser:

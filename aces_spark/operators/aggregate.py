@@ -16,7 +16,7 @@ kernels:
 
 Spark-first design decisions (vs the reference's physical plan):
 
-* The temporal kernel is a single ``Window.rangeBetween`` over
+* The temporal kernel is a single ``RANGE BETWEEN`` frame over
   ``unix_micros(timestamp)`` — open endpoints become exact ±1 μs bound
   shrinks (timestamps are μs precision; the reference itself relies on the
   same trick at ``src/aces/aggregate.py:1013-1017``).
@@ -26,10 +26,18 @@ Spark-first design decisions (vs the reference's physical plan):
   the "can a boundary row bound its own window" corner cases — but runs it
   entirely with window functions over ONE hash partitioning by
   ``subject_id``: the reference's offset-correction join (its J6,
-  ``aggregate.py:1115-1126``) is replaced by an inline ``rangeBetween``
+  ``aggregate.py:1115-1126``) is replaced by an inline range-frame
   window computed in the same stage, so the whole kernel is join-free and
   shuffle-minimal (exactly one exchange on ``subject_id``, reused by every
   window function via identical partition keys).
+* Every projection is written as SQL expression text and applied with one
+  ``DataFrame.selectExpr`` per stage: the temporal kernel is one stage, the
+  event-bound kernel two (sums, then fills) plus its output projection. A
+  Column-API expression costs a py4j round trip per node, so building a
+  plan that way cost more than running it; a text stage costs a handful of
+  calls whatever the number of predicates. Every identifier is
+  backtick-quoted (:func:`~aces_spark.utils.ident`), and range-frame bounds
+  are written as ``n PRECEDING`` / ``n FOLLOWING`` with ``L`` literals.
 
 At 100 TB: all per-subject windows are embarrassingly parallel after the
 single hash exchange; no broadcast, no driver materialization. Skewed
@@ -42,8 +50,7 @@ from __future__ import annotations
 
 from datetime import timedelta
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame
 
 from ..types import (
     PRED_CNT_TYPE,
@@ -51,15 +58,17 @@ from ..types import (
     ToEventWindowBounds,
     td_to_us,
 )
-
-META_COLS = {"subject_id", "timestamp"}
-
+from ..utils import ident
 
 #: The sort key of every kernel window: ``unix_micros(timestamp)``, made a
 #: column once. In append mode it stays on the relation, so kernels stacked
 #: by the planner order by one attribute and share their sorts (Spark
 #: aliases each window's own order expression apart and re-sorts for each).
 TS_US = "__ts_us"
+
+META_COLS = {"subject_id", "timestamp", TS_US}
+
+_TS = ident("timestamp")
 
 
 def _pred_cols(df: DataFrame) -> list[str]:
@@ -69,7 +78,53 @@ def _pred_cols(df: DataFrame) -> list[str]:
 def _with_ts_us(df: DataFrame) -> DataFrame:
     if TS_US in df.columns:
         return df
-    return df.withColumn(TS_US, F.unix_micros(F.col("timestamp")))
+    return df.selectExpr("*", f"unix_micros({_TS}) AS {ident(TS_US)}")
+
+
+def _as(outputs: dict[str, str]) -> list[str]:
+    """``{name: SQL text}`` as ``selectExpr`` items."""
+    return [f"{text} AS {ident(name)}" for name, text in outputs.items()]
+
+
+def _bound(us: int) -> str:
+    """A range-frame bound ``us`` μs from the current row's sort key."""
+    if us == 0:
+        return "CURRENT ROW"
+    return f"{-us}L PRECEDING" if us < 0 else f"{us}L FOLLOWING"
+
+
+def _over(frame: str, desc: bool = False) -> str:
+    """A window over the subject's rows in shared-sort-key order."""
+    order = f"{ident(TS_US)} DESC" if desc else f"{ident(TS_US)} ASC"
+    return f"OVER (PARTITION BY subject_id ORDER BY {order} {frame})"
+
+
+def _range_sum(c: str, lo: int, hi: int) -> str:
+    """``c`` summed over the range frame ``[lo, hi]`` μs, 0 when empty."""
+    return f"coalesce(sum({ident(c)}) {_over(f'RANGE BETWEEN {_bound(lo)} AND {_bound(hi)}')}, 0L)"
+
+
+def _temporal_outputs(
+    pred_cols: list[str], bounds: TemporalWindowBounds, prefix: str
+) -> dict[str, str]:
+    """Output texts of the temporal kernel over a relation carrying
+    ``__ts_us``."""
+    lo, hi = bounds.spark_range_bounds
+    off_us = td_to_us(bounds.offset)
+    ws_us = td_to_us(bounds.window_size)
+    if lo > hi:
+        # degenerate window (e.g. zero-length with an open endpoint): frame
+        # is empty for every row; Spark rejects start > end frames, so emit
+        # literal zeros directly.
+        sums = {f"{prefix}{c}": f"CAST(0 AS {PRED_CNT_TYPE})" for c in pred_cols}
+    else:
+        sums = {f"{prefix}{c}": f"CAST({_range_sum(c, lo, hi)} AS {PRED_CNT_TYPE})" for c in pred_cols}
+    ts_us = ident(TS_US)
+    return {
+        f"{prefix}timestamp_at_start": f"timestamp_micros({ts_us} + {off_us}L)",
+        f"{prefix}timestamp_at_end": f"timestamp_micros({ts_us} + {off_us + ws_us}L)",
+        **sums,
+    }
 
 
 def aggregate_temporal_window(
@@ -103,50 +158,24 @@ def aggregate_temporal_window(
         endpoint_expr = TemporalWindowBounds(*endpoint_expr)
 
     pred_cols = value_cols if value_cols is not None else _pred_cols(predicates_df)
-    lo, hi = endpoint_expr.spark_range_bounds
-    predicates_df = _with_ts_us(predicates_df)
-    ts_us = F.col(TS_US)
-    off_us = td_to_us(endpoint_expr.offset)
-    ws_us = td_to_us(endpoint_expr.window_size)
-
-    w = Window.partitionBy("subject_id").orderBy(ts_us.asc()).rangeBetween(lo, hi)
-
-    if lo > hi:
-        # degenerate window (e.g. zero-length with an open endpoint): frame
-        # is empty for every row; Spark rejects start > end frames, so emit
-        # literal zeros directly.
-        sums = [F.lit(0).cast(PRED_CNT_TYPE).alias(f"{prefix}{c}") for c in pred_cols]
-    else:
-        sums = [
-            F.coalesce(F.sum(F.col(c)).over(w), F.lit(0)).cast(PRED_CNT_TYPE).alias(f"{prefix}{c}")
-            for c in pred_cols
-        ]
-
-    out_cols = [
-        F.timestamp_micros(ts_us + off_us).alias(f"{prefix}timestamp_at_start"),
-        F.timestamp_micros(ts_us + off_us + ws_us).alias(f"{prefix}timestamp_at_end"),
-        *sums,
-    ]
+    df = _with_ts_us(predicates_df)
+    outputs = _as(_temporal_outputs(pred_cols, endpoint_expr, prefix))
     if append:
-        return predicates_df.select("*", *out_cols)
-    return predicates_df.select("subject_id", "timestamp", *out_cols)
+        return df.selectExpr("*", *outputs)
+    return df.selectExpr("subject_id", _TS, *outputs)
 
 
-def _resolve_boundary(boundary) -> Column:
-    """Resolve a boundary descriptor (from
-    ``ToEventWindowBounds.bound_sum_kwargs``) or pass through a boolean
-    Column. Record start/end pseudo-events mirror
-    ``src/aces/types.py:309-318``."""
-    if isinstance(boundary, Column):
-        return boundary
-    w_subj = Window.partitionBy("subject_id")
+def _boundary_sql(boundary) -> str:
+    """SQL text of a boundary descriptor (from
+    ``ToEventWindowBounds.bound_sum_kwargs``). Record start/end
+    pseudo-events mirror ``src/aces/types.py:309-318``."""
     match boundary:
         case ("col", name):
-            return F.col(name) > 0
+            return f"{ident(name)} > 0"
         case ("record_start",):
-            return F.col("timestamp") == F.min("timestamp").over(w_subj)
+            return f"{_TS} = min({_TS}) OVER (PARTITION BY subject_id)"
         case ("record_end",):
-            return F.col("timestamp") == F.max("timestamp").over(w_subj)
+            return f"{_TS} = max({_TS}) OVER (PARTITION BY subject_id)"
         case _:
             raise ValueError(f"Invalid boundary descriptor: {boundary!r}")
 
@@ -201,138 +230,85 @@ def _offset_interval_bounds(mode: str, closed: str, offset: timedelta) -> tuple[
 
 def _event_bound_outputs(
     pred_cols: list[str], mode: str, closed: str, offset: timedelta, tp: str, prefix: str = ""
-) -> list[Column]:
-    """Output columns of the event-bound kernel (steps 4+5: cumsum
+) -> dict[str, str]:
+    """Output texts of the event-bound kernel (steps 4+5: cumsum
     differences, endpoint corrections, offset correction, window
-    timestamps), given a relation carrying the ``{tp}``-namespaced temp
-    columns ``cum_*`` / ``bcum_*`` / ``off_*`` / ``ts_at_boundary``."""
+    timestamps), keyed by output name, over a relation carrying the
+    ``{tp}``-namespaced temp columns ``cum_*`` / ``bcum_*`` / ``off_*`` /
+    ``ts_at_boundary``."""
     zero = timedelta(0)
     off_us = td_to_us(offset)
 
     # --- step 4: cumsum differences + endpoint corrections ---
-    def window_sum(c: str) -> Column:
+    def window_sum(c: str) -> str:
+        cum, bcum = ident(f"{tp}cum_{c}"), ident(f"{tp}bcum_{c}")
         if mode == "bound_to_row":
-            val = F.col(f"{tp}cum_{c}") - F.col(f"{tp}bcum_{c}")
+            val = f"{cum} - {bcum}"
             if (closed in ("left", "none") and offset <= zero) or offset < zero:
-                val = val - F.col(c)  # ref :1027-1031
+                val += f" - {ident(c)}"  # ref :1027-1031
         else:
-            val = F.col(f"{tp}bcum_{c}") - F.col(f"{tp}cum_{c}")
+            val = f"{bcum} - {cum}"
             if (closed in ("left", "both") and offset <= zero) or offset < zero:
-                val = val + F.col(c)  # ref :1046-1050
+                val += f" + {ident(c)}"  # ref :1046-1050
         return val
 
     # --- step 5: offset-interval correction (ref :1094-1113) ---
-    def with_offset(c: str, val: Column) -> Column:
+    def with_offset(c: str, val: str) -> str:
         if offset == zero:
             return val
+        off = ident(f"{tp}off_{c}")
         if mode == "bound_to_row" and offset > zero:
-            return val + F.col(f"{tp}off_{c}")
+            return f"{val} + {off}"
         if (mode == "bound_to_row" and offset < zero) or (mode == "row_to_bound" and offset > zero):
-            return val - F.col(f"{tp}off_{c}")
-        return val + F.col(f"{tp}off_{c}")  # row_to_bound, offset < 0
+            return f"{val} - {off}"
+        return f"{val} + {off}"  # row_to_bound, offset < 0
 
-    row_ts_shifted = F.timestamp_micros(F.unix_micros(F.col("timestamp")) + F.lit(off_us))
-    has_bound = F.col(f"{tp}ts_at_boundary").isNotNull()
-    if mode == "bound_to_row":
-        st_ts = F.col(f"{tp}ts_at_boundary")
-        end_ts = F.when(has_bound, row_ts_shifted)
-    else:
-        st_ts = F.when(has_bound, row_ts_shifted)
-        end_ts = F.col(f"{tp}ts_at_boundary")
-
-    return [
-        st_ts.alias(f"{prefix}timestamp_at_start"),
-        end_ts.alias(f"{prefix}timestamp_at_end"),
-        *[
-            F.coalesce(with_offset(c, window_sum(c)).cast(PRED_CNT_TYPE), F.lit(0)).alias(
-                f"{prefix}{c}"
-            )
+    bnd_ts = ident(f"{tp}ts_at_boundary")
+    row_ts_shifted = (
+        f"CASE WHEN {bnd_ts} IS NOT NULL THEN timestamp_micros(unix_micros({_TS}) + {off_us}L) END"
+    )
+    st_ts, end_ts = (bnd_ts, row_ts_shifted) if mode == "bound_to_row" else (row_ts_shifted, bnd_ts)
+    return {
+        f"{prefix}timestamp_at_start": st_ts,
+        f"{prefix}timestamp_at_end": end_ts,
+        **{
+            f"{prefix}{c}": f"coalesce(CAST({with_offset(c, window_sum(c))} AS {PRED_CNT_TYPE}), 0L)"
             for c in pred_cols
-        ],
-    ]
+        },
+    }
 
 
-def boolean_expr_bound_sum(
+def _event_bound_fills(
     df: DataFrame,
     boundary_expr,
     mode: str,
     closed: str,
-    offset: timedelta = timedelta(0),
-    prefix: str = "",
-    append: bool = False,
-    value_cols: list[str] | None = None,
-    carry: dict[str, Column] | None = None,
+    offset: timedelta,
+    tp: str,
+    pred_cols: list[str],
+    carry: dict[str, str],
 ) -> DataFrame:
-    """Sum all predicate columns between each row (± ``offset``) and the
-    nearest per-subject boundary row (reference
-    ``src/aces/aggregate.py:479-1126``; its 8-case mode×closed truth table at
-    ``:520-541`` is the spec, pinned by tests/test_event_bound.py).
+    """Steps 1-3 and 5 prep of :func:`boolean_expr_bound_sum` on a relation
+    carrying ``__ts_us``: one stage adds the ``{tp}``-namespaced cumsums,
+    offset sums and boundary flag, a second the boundary fills and the
+    carried columns. :func:`_event_bound_outputs` reads the result."""
+    if isinstance(boundary_expr, Column):
+        df = df.withColumn(f"{tp}bexpr", boundary_expr)
 
-    Algorithm (faithful to the reference, reformulated join-free):
-
-    1. Per-subject running cumulative sums of every predicate column
-       (ref ``:999-1000``) — ``rowsBetween(unboundedPreceding, currentRow)``.
-    2. A boundary side-relation built by filtering boundary rows, carrying
-       the cumsum at the boundary (± the boundary row's own counts per
-       mode×closed, ref ``:1002-1010``) and a sort key shifted by
-       ``-offset ± 1 μs`` so interleaving encodes closedness exactly
-       (ref ``:1012-1017``, ``:1032-1036``).
-    3. Union real + boundary rows, order within subject by the shifted key
-       (ties: real rows first, matching the reference's stable concat), and
-       directionally fill the boundary cumsum/timestamp onto real rows
-       (forward for ``bound_to_row``, backward for ``row_to_bound``,
-       ref ``:1052-1072``) — ``last``/``first(ignorenulls=True)`` frames.
-    4. Window sum = difference of cumsums with endpoint-inclusion
-       corrections (ref ``:1020-1031``, ``:1039-1050``).
-    5. Non-zero offsets add/subtract a temporal aggregation over the offset
-       interval (ref ``:969-995``, ``:1094-1126``) — computed INLINE as a
-       ``rangeBetween`` window before the union instead of the reference's
-       left join.
-    6. No qualifying boundary ⇒ null window timestamps, zero counts
-       (ref ``:1085-1092``).
-
-    ``prefix``/``append``/``value_cols`` behave as in
-    :func:`aggregate_temporal_window` (planner support: outputs — and
-    all internal temp columns — are namespaced so several kernel
-    applications can stack on one relation).
-
-    ``carry`` maps output names to columns that are copied from each row's
-    boundary row, through the same fill frame as the window timestamps
-    (null where no boundary qualifies). Each carried column must be non-null
-    on every boundary row, or the fill skips to an older boundary; the
-    planner carries a ``struct``, which never is.
-    """
-    if mode not in ("bound_to_row", "row_to_bound"):
-        raise ValueError(f"Mode '{mode}' invalid!")
-    if closed not in ("both", "none", "left", "right"):
-        raise ValueError(f"Closed '{closed}' invalid!")
-
-    pred_cols = value_cols if value_cols is not None else _pred_cols(df)
-    boundary_col = _resolve_boundary(boundary_expr)
-    tp = f"__{prefix}" if prefix else "__"  # temp-column namespace
-
-    w_subj = Window.partitionBy("subject_id")
-    df = _with_ts_us(df)
-    ts_us = F.col(TS_US)
-    off_us = td_to_us(offset)
+    # --- step 1: per-subject cumulative sums (ref :999-1000) ---
+    cum_over = _over("ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
+    stage1 = {f"{tp}cum_{c}": f"sum({ident(c)}) {cum_over}" for c in pred_cols}
 
     # --- step 5 prep: offset-interval temporal sums, inline (ref :969-995) ---
-    with_offset_cols: dict[str, Column] = {}
     interval = _offset_interval_bounds(mode, closed, offset)
     if interval is not None:
         lo, hi = interval
-        if lo > hi:
-            with_offset_cols = {f"{tp}off_{c}": F.lit(0).cast("long") for c in pred_cols}
-        else:
-            w_off = w_subj.orderBy(ts_us.asc()).rangeBetween(lo, hi)
-            with_offset_cols = {
-                f"{tp}off_{c}": F.coalesce(F.sum(F.col(c)).over(w_off), F.lit(0)) for c in pred_cols
-            }
-
-    # --- step 1: per-subject cumulative sums (ref :999-1000) ---
-    w_cum = w_subj.orderBy(ts_us.asc()).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum_cols = {f"{tp}cum_{c}": F.sum(F.col(c)).over(w_cum) for c in pred_cols}
-    base = df.withColumns({**cum_cols, **with_offset_cols, f"{tp}bexpr": boundary_col})
+        stage1.update(
+            {f"{tp}off_{c}": "0L" if lo > hi else _range_sum(c, lo, hi) for c in pred_cols}
+        )
+    if not isinstance(boundary_expr, Column):
+        stage1[f"{tp}bexpr"] = _boundary_sql(boundary_expr)
+    df = df.selectExpr("*", *_as(stage1))
 
     # --- steps 2+3: nearest-qualifying-boundary resolution ---
     # The reference interleaves epsilon-shifted boundary pseudo-rows and
@@ -355,33 +331,93 @@ def boolean_expr_bound_sum(
     # finishing in milliseconds and stalling its whole task. The negated key
     # is the shared sort column in descending order: Spark flips the sign
     # of range offsets for a descending key.
-    sign, fill_bound, exclude_boundary_counts = _fill_spec(mode, closed, off_us)
-    fill_key = ts_us.asc() if sign == 1 else ts_us.desc()
-    w_fill = w_subj.orderBy(fill_key).rangeBetween(Window.unboundedPreceding, fill_bound)
+    sign, fill_bound, exclude_boundary_counts = _fill_spec(mode, closed, td_to_us(offset))
+    fill_over = _over(f"RANGE BETWEEN UNBOUNDED PRECEDING AND {_bound(fill_bound)}", desc=sign == -1)
+    bexpr = ident(f"{tp}bexpr")
 
-    def fill(col: Column) -> Column:
-        return F.last(col, ignorenulls=True).over(w_fill)
+    def fill(text: str) -> str:
+        return f"last(CASE WHEN {bexpr} THEN {text} END, true) {fill_over}"
 
-    bnd_ts = F.when(F.col(f"{tp}bexpr"), F.col("timestamp"))
+    def bnd_cum(c: str) -> str:
+        cum = ident(f"{tp}cum_{c}")
+        return f"{cum} - {ident(c)}" if exclude_boundary_counts else cum
 
-    def bnd_cum(c: str) -> Column:
-        val = F.col(f"{tp}cum_{c}")
-        if exclude_boundary_counts:
-            val = val - F.col(c)
-        return F.when(F.col(f"{tp}bexpr"), val)
-
-    carry = carry or {}
-    fill_cols = {
-        f"{tp}ts_at_boundary": fill(bnd_ts),
+    fills = {
+        f"{tp}ts_at_boundary": fill(_TS),
         **{f"{tp}bcum_{c}": fill(bnd_cum(c)) for c in pred_cols},
-        **{name: fill(F.when(F.col(f"{tp}bexpr"), col)) for name, col in carry.items()},
+        **{name: fill(text) for name, text in carry.items()},
     }
-    filled = base.withColumns(fill_cols)
+    return df.selectExpr("*", *_as(fills))
 
-    out_cols = _event_bound_outputs(pred_cols, mode, closed, offset, tp, prefix)
-    if append:
-        return filled.select(*df.columns, *out_cols, *carry)
-    return filled.select("subject_id", "timestamp", *out_cols, *carry)
+
+def boolean_expr_bound_sum(
+    df: DataFrame,
+    boundary_expr,
+    mode: str,
+    closed: str,
+    offset: timedelta = timedelta(0),
+    prefix: str = "",
+    append: bool = False,
+    value_cols: list[str] | None = None,
+    carry: dict[str, str] | None = None,
+) -> DataFrame:
+    """Sum all predicate columns between each row (± ``offset``) and the
+    nearest per-subject boundary row (reference
+    ``src/aces/aggregate.py:479-1126``; its 8-case mode×closed truth table at
+    ``:520-541`` is the spec, pinned by tests/test_event_bound.py).
+
+    Algorithm (faithful to the reference, reformulated join-free):
+
+    1. Per-subject running cumulative sums of every predicate column
+       (ref ``:999-1000``) — ``ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT
+       ROW``.
+    2. A boundary side-relation built by filtering boundary rows, carrying
+       the cumsum at the boundary (± the boundary row's own counts per
+       mode×closed, ref ``:1002-1010``) and a sort key shifted by
+       ``-offset ± 1 μs`` so interleaving encodes closedness exactly
+       (ref ``:1012-1017``, ``:1032-1036``).
+    3. Union real + boundary rows, order within subject by the shifted key
+       (ties: real rows first, matching the reference's stable concat), and
+       directionally fill the boundary cumsum/timestamp onto real rows
+       (forward for ``bound_to_row``, backward for ``row_to_bound``,
+       ref ``:1052-1072``) — ``last(…, true)`` over a growing range frame.
+    4. Window sum = difference of cumsums with endpoint-inclusion
+       corrections (ref ``:1020-1031``, ``:1039-1050``).
+    5. Non-zero offsets add/subtract a temporal aggregation over the offset
+       interval (ref ``:969-995``, ``:1094-1126``) — computed INLINE as a
+       range-frame window before the union instead of the reference's
+       left join.
+    6. No qualifying boundary ⇒ null window timestamps, zero counts
+       (ref ``:1085-1092``).
+
+    ``boundary_expr`` is a descriptor (``ToEventWindowBounds.bound_sum_kwargs``)
+    or a boolean Column; a Column is added with one ``withColumn`` and
+    everything after it is SQL text.
+
+    ``prefix``/``append``/``value_cols`` behave as in
+    :func:`aggregate_temporal_window` (outputs — and all internal temp
+    columns — are namespaced so several kernel applications can stack on
+    one relation).
+
+    ``carry`` maps output names to SQL expression text that is copied from
+    each row's boundary row, through the same fill frame as the window
+    timestamps (null where no boundary qualifies). Each carried expression
+    must be non-null on every boundary row, or the fill skips to an older
+    boundary.
+    """
+    if mode not in ("bound_to_row", "row_to_bound"):
+        raise ValueError(f"Mode '{mode}' invalid!")
+    if closed not in ("both", "none", "left", "right"):
+        raise ValueError(f"Closed '{closed}' invalid!")
+
+    pred_cols = value_cols if value_cols is not None else _pred_cols(df)
+    tp = f"__{prefix}" if prefix else "__"  # temp-column namespace
+    df = _with_ts_us(df)
+    carry = carry or {}
+    filled = _event_bound_fills(df, boundary_expr, mode, closed, offset, tp, pred_cols, carry)
+    keep = [ident(c) for c in df.columns] if append else ["subject_id", _TS]
+    outputs = _event_bound_outputs(pred_cols, mode, closed, offset, tp, prefix)
+    return filled.selectExpr(*keep, *_as(outputs), *map(ident, carry))
 
 
 def aggregate_event_bound_window(

@@ -48,6 +48,7 @@ from ..types import (
     td_to_us,
 )
 from .aggregate import (
+    _as,
     _event_bound_outputs,
     _fill_spec,
     _offset_interval_bounds,
@@ -512,8 +513,8 @@ def boolean_expr_bound_sum_chunked(
     }
     filled = moved.withColumns(transfer).filter(is_home).withColumns(final_cols)
 
-    out_cols = _event_bound_outputs(pred_cols, mode, closed, offset, tp)
-    return filled.select("subject_id", "timestamp", *out_cols)
+    out_cols = _as(_event_bound_outputs(pred_cols, mode, closed, offset, tp))
+    return filled.selectExpr("subject_id", "`timestamp`", *out_cols)
 
 
 def aggregate_event_bound_window_chunked(

@@ -29,6 +29,14 @@ kept and its anchor and summaries projected to null.
 
 The plan is one hash exchange on ``subject_id`` followed by window
 operators: no join, no union, no cache.
+
+The plan is built as SQL text. Validity, junk flags and summary structs
+(``named_struct``) are expression strings over the one relation; a temporal
+edge adds one ``selectExpr`` stage and an event-bound edge two (sums, then
+fills), whose outputs stay text that later stages read. The tail is one
+projection and a filter. Construction cost therefore follows the number of
+plan operations, not the number of expression nodes: the HF readmission
+task builds in ~140 py4j calls, against ~6k when every node was a Column.
 """
 
 from __future__ import annotations
@@ -37,15 +45,23 @@ import dataclasses
 import itertools
 from datetime import timedelta
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from ..operators.aggregate import aggregate_temporal_window, boolean_expr_bound_sum
-from ..operators.constraints import constraints_hold
+from ..operators.aggregate import (
+    _event_bound_fills,
+    _event_bound_outputs,
+    _temporal_outputs,
+    _with_ts_us,
+    aggregate_temporal_window,
+)
+from ..operators.constraints import constraints_sql
 from ..types import TemporalWindowBounds
-from ..utils import Node
+from ..utils import Node, ident, sql_str
 
 ANCHOR = "subtree_anchor_timestamp"
+
+#: The boolean column :func:`extract_tree` leaves for its caller to filter on.
+KEEP = "__keep"
 
 
 def can_fuse(tree: Node) -> bool:
@@ -54,52 +70,62 @@ def can_fuse(tree: Node) -> bool:
     return True
 
 
+def _and(*terms: str) -> str:
+    """SQL conjunction of ``terms`` (``true`` terms dropped)."""
+    return " AND ".join(f"({t})" for t in terms if t != "true") or "true"
+
+
 @dataclasses.dataclass
 class _Result:
-    """A subtree anchored at each row: whether every edge below holds,
-    whether anchoring here yields the junk row (``None``: it never can),
-    and ``(node name, summary struct)`` for every descendant in pre-order."""
+    """A subtree anchored at each row, as SQL text over the planner's
+    relation: whether every edge below holds, whether anchoring here yields
+    the junk row (``None``: it never can), and ``(node name, summary
+    struct)`` for every descendant in pre-order."""
 
-    valid: Column
-    junk: Column | None
-    summaries: list[tuple[str, Column]]
+    valid: str
+    junk: str | None
+    summaries: list[tuple[str, str]]
 
-    def pack(self) -> Column:
+    def pack(self) -> str:
         """One struct, non-null on every row: the hop's fill skips nulls,
         so a null here would let it reach past the nearest boundary."""
-        junk = F.lit(False) if self.junk is None else self.junk
-        return F.struct(
-            F.coalesce(self.valid, F.lit(False)).alias("valid"),
-            F.coalesce(junk, F.lit(False)).alias("junk"),
-            *[s.alias(f"s{i}") for i, (_, s) in enumerate(self.summaries)],
-        )
+        junk = "false" if self.junk is None else f"coalesce({self.junk}, false)"
+        fields = [
+            f"'valid', coalesce({self.valid}, false)",
+            f"'junk', {junk}",
+            *[f"'s{i}', {s}" for i, (_, s) in enumerate(self.summaries)],
+        ]
+        return f"named_struct({', '.join(fields)})"
 
-    def unpack(self, packed: Column) -> _Result:
+    def unpack(self, packed: str) -> _Result:
         """This result, read from a copy of :meth:`pack` on another row."""
         return _Result(
-            packed["valid"],
-            None if self.junk is None else packed["junk"],
-            [(name, packed[f"s{i}"]) for i, (name, _) in enumerate(self.summaries)],
+            f"{packed}.`valid`",
+            None if self.junk is None else f"{packed}.`junk`",
+            [(name, f"{packed}.`s{i}`") for i, (name, _) in enumerate(self.summaries)],
         )
 
 
-def extract_tree(tree: Node, predicates_df: DataFrame, root_valid: Column) -> DataFrame:
+def extract_tree(tree: Node, predicates_df: DataFrame, root_valid: str) -> DataFrame:
     """Evaluate the window tree rooted at ``tree`` in one windowed scan.
 
-    Returns ``(subject_id, subtree_anchor_timestamp, {node}_summary...)``
-    with one row per trigger realization (``root_valid`` holds and every
-    edge realizes), plus the junk row described in the module docstring.
+    ``root_valid`` is SQL text, true on the trigger rows. Returns
+    ``(subject_id, subtree_anchor_timestamp, {node}_summary..., __keep)``
+    for every event row; :data:`KEEP` is true on each trigger realization
+    (``root_valid`` holds and every edge realizes) and on the junk row
+    described in the module docstring. The caller filters on it and drops
+    it in its own projection, so the whole tail is two plan operations.
     Summary structs hold ``window_name``, ``timestamp_at_start``,
     ``timestamp_at_end`` and every predicate count (reference
     ``src/aces/extract_subtree.py:366-375``).
     """
     pred_cols = [c for c in predicates_df.columns if c not in ("subject_id", "timestamp")]
-    df = predicates_df
+    df = _with_ts_us(predicates_df)
     ids = itertools.count(1)
 
     def subtree(node: Node, offset: timedelta) -> _Result:
         nonlocal df
-        valid, junk, summaries = F.lit(True), None, []
+        valid, junk, summaries = [], None, []
         for child in node.children:
             pfx = f"__n{next(ids)}_"
             # fold the accumulated offset into a copy: the config's own
@@ -111,55 +137,61 @@ def extract_tree(tree: Node, predicates_df: DataFrame, root_valid: Column) -> Da
                 df = aggregate_temporal_window(
                     df, bounds, prefix=pfx, append=True, value_cols=pred_cols
                 )
-                hop_ok, below = F.lit(True), subtree(child, offset + bounds.window_size)
+                outs = {name: ident(name) for name in _temporal_outputs(pred_cols, bounds, pfx)}
+                hop_ok, below = "true", subtree(child, offset + bounds.window_size)
             else:
                 at_row = subtree(child, timedelta(0)) if child.children else None
                 kw = bounds.bound_sum_kwargs
-                df = boolean_expr_bound_sum(
-                    df, kw["boundary"], kw["mode"], kw["closed"], kw["offset"],
-                    prefix=pfx, append=True, value_cols=pred_cols,
+                df = _event_bound_fills(
+                    df, kw["boundary"], kw["mode"], kw["closed"], kw["offset"], pfx, pred_cols,
                     carry={} if at_row is None else {f"{pfx}hop": at_row.pack()},
                 )
+                # the outputs stay SQL text over the fills: no stage of their own
+                outs = _event_bound_outputs(
+                    pred_cols, kw["mode"], kw["closed"], kw["offset"], pfx, prefix=pfx
+                )
                 side = "start" if kw["mode"] == "bound_to_row" else "end"
-                resolved = F.col(f"{pfx}timestamp_at_{side}").isNotNull()
+                resolved = f"{outs[f'{pfx}timestamp_at_{side}']} IS NOT NULL"
                 if at_row is None:
                     # an unresolved leaf boundary is where the junk row comes from
-                    hop_ok, below = F.lit(True), _Result(resolved, ~resolved, [])
+                    hop_ok, below = "true", _Result(resolved, f"NOT ({resolved})", [])
                 else:
                     # the child is anchored at the boundary row: read its
                     # subtree from there
-                    hop_ok, below = resolved, at_row.unpack(F.col(f"{pfx}hop"))
-            gate = constraints_hold(child.constraints, pfx) & hop_ok
-            valid = valid & gate & below.valid
-            junk = None if below.junk is None else gate & below.junk
-            summaries.append((child.name, _summary(child.name, pfx, pred_cols)))
+                    hop_ok, below = resolved, at_row.unpack(ident(f"{pfx}hop"))
+            gate = _and(constraints_sql(child.constraints, lambda c: outs[f"{pfx}{c}"]), hop_ok)
+            valid += [gate, below.valid]
+            junk = None if below.junk is None else _and(gate, below.junk)
+            summaries.append((child.name, _summary(child.name, pfx, pred_cols, outs)))
             summaries += below.summaries
-        return _Result(valid, junk if len(node.children) == 1 else None, summaries)
+        return _Result(_and(*valid), junk if len(node.children) == 1 else None, summaries)
 
     result = subtree(tree, timedelta(0))
-    trigger = F.coalesce(root_valid, F.lit(False))
-    df = df.withColumn("__valid", trigger & result.valid)
-    keep = F.col("__valid")
+    trigger = f"coalesce({root_valid}, false)"
+    valid = _and(trigger, result.valid)
+    keep = valid
     if result.junk is not None:
         # the subject's first junk row; a whole-subject frame needs no sort
         # beyond the subject_id clustering every kernel already has
-        junk_ts = F.when(trigger & F.coalesce(result.junk, F.lit(False)), F.col("timestamp"))
-        df = df.withColumn(
-            "__first_junk",
-            F.col("timestamp") == F.min(junk_ts).over(Window.partitionBy("subject_id")),
-        )
-        keep = keep | F.coalesce(F.col("__first_junk"), F.lit(False))
-    return df.filter(keep).select(
+        junk_ts = f"CASE WHEN {_and(trigger, f'coalesce({result.junk}, false)')} THEN `timestamp` END"
+        first_junk = f"`timestamp` = min({junk_ts}) OVER (PARTITION BY subject_id)"
+        keep = f"({valid}) OR coalesce({first_junk}, false)"
+    return df.selectExpr(
         "subject_id",
-        F.when(F.col("__valid"), F.col("timestamp")).alias(ANCHOR),
-        *[F.when(F.col("__valid"), s).alias(f"{name}_summary") for name, s in result.summaries],
+        f"CASE WHEN {valid} THEN `timestamp` END AS {ident(ANCHOR)}",
+        *[
+            f"CASE WHEN {valid} THEN {s} END AS {ident(f'{name}_summary')}"
+            for name, s in result.summaries
+        ],
+        f"{keep} AS {ident(KEEP)}",
     )
 
 
-def _summary(name: str, pfx: str, pred_cols: list[str]) -> Column:
-    return F.struct(
-        F.lit(name).alias("window_name"),
-        F.col(f"{pfx}timestamp_at_start").alias("timestamp_at_start"),
-        F.col(f"{pfx}timestamp_at_end").alias("timestamp_at_end"),
-        *[F.col(f"{pfx}{c}").alias(c) for c in pred_cols],
-    )
+def _summary(name: str, pfx: str, pred_cols: list[str], outs: dict[str, str]) -> str:
+    fields = [
+        ("window_name", sql_str(name)),
+        ("timestamp_at_start", outs[f"{pfx}timestamp_at_start"]),
+        ("timestamp_at_end", outs[f"{pfx}timestamp_at_end"]),
+        *[(c, outs[f"{pfx}{c}"]) for c in pred_cols],
+    ]
+    return f"named_struct({', '.join(f'{sql_str(k)}, {v}' for k, v in fields)})"

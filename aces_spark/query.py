@@ -12,26 +12,29 @@
    (``query.py:121-127``);
 3. trigger anchors and the whole window tree in one windowed scan over the
    ``subject_id``-partitioned frame (``plans/fused.py``);
-4. rename the anchor to ``trigger``; extract ``label`` /
-   ``index_timestamp`` from their windows' struct summaries
-   (``query.py:153-196``);
-5. project output columns in window-tree pre-order (``query.py:155-159``).
+4. in one projection: rename the anchor to ``trigger``, extract
+   ``label`` / ``index_timestamp`` from their windows' struct summaries
+   (``query.py:153-196``) and order the output columns in window-tree
+   pre-order (``query.py:155-159``).
 
 Nothing is cached and no session conf is touched: the plan is one hash
-exchange on ``subject_id`` followed by window operators.
+exchange on ``subject_id`` followed by window operators. Every stage is
+SQL expression text applied with one ``selectExpr`` (see
+``operators/aggregate.py``), so building the plan costs a few py4j calls
+per stage rather than one per expression node.
 """
 
 from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .config import TaskExtractorConfig
 from .operators.constraints import check_static_variables
-from .plans.fused import ANCHOR, extract_tree
-from .utils import preorder_iter
+from .plans.fused import ANCHOR, KEEP, extract_tree
+from .utils import ident, preorder_iter
 
 logger = logging.getLogger(__name__)
 
@@ -112,72 +115,68 @@ def query(
     if static_variables:
         predicates_df = check_static_variables(static_variables, predicates_df)
     else:
-        predicates_df = predicates_df.filter(
-            F.col("subject_id").isNotNull() & F.col("timestamp").isNotNull()
-        )
+        predicates_df = predicates_df.filter("subject_id IS NOT NULL AND `timestamp` IS NOT NULL")
 
-    result = extract_tree(cfg.window_tree, predicates_df, F.col(cfg.trigger.predicate) >= 1)
-    result = result.withColumnRenamed(ANCHOR, "trigger")
+    result = extract_tree(
+        cfg.window_tree, predicates_df, f"{ident(cfg.trigger.predicate)} >= 1"
+    )
 
-    to_return_cols = [
-        "subject_id",
-        "trigger",
-        *[f"{node.node_name}_summary" for node in preorder_iter(cfg.window_tree)][1:],
-    ]
+    def summary_field(window_name: str, field: str) -> str:
+        side = "end" if cfg.windows[window_name].root_node == "start" else "start"
+        return f"{ident(f'{window_name}.{side}_summary')}.{ident(field)}"
 
+    # rename, label, index and column order in one projection
+    out = ["subject_id", f"{ident(ANCHOR)} AS `trigger`"]
     if cfg.label_window:
-        label_col = "end" if cfg.windows[cfg.label_window].root_node == "start" else "start"
-        result = result.withColumn(
-            "label",
-            F.col(f"`{cfg.label_window}.{label_col}_summary`.`{cfg.windows[cfg.label_window].label}`"),
-        )
-        to_return_cols.insert(1, "label")
-
+        label = summary_field(cfg.label_window, cfg.windows[cfg.label_window].label)
+        out.insert(1, f"{label} AS `label`")
     if cfg.index_timestamp_window:
-        index_timestamp_col = (
-            "end" if cfg.windows[cfg.index_timestamp_window].root_node == "start" else "start"
-        )
-        result = result.withColumn(
-            "index_timestamp",
-            F.col(
-                f"`{cfg.index_timestamp_window}.{index_timestamp_col}_summary`"
-                f".`timestamp_at_{cfg.windows[cfg.index_timestamp_window].index_timestamp}`"
-            ),
-        )
-        to_return_cols.insert(1, "index_timestamp")
-
-    return result.select(*[F.col(f"`{c}`") for c in to_return_cols])
+        side = cfg.windows[cfg.index_timestamp_window].index_timestamp
+        index = summary_field(cfg.index_timestamp_window, f"timestamp_at_{side}")
+        out.insert(1, f"{index} AS `index_timestamp`")
+    out += [ident(f"{node.node_name}_summary") for node in preorder_iter(cfg.window_tree)][1:]
+    return result.filter(ident(KEEP)).selectExpr(*out)
 
 
-def report_cohort_stats(result: DataFrame, label_col: str = "label") -> dict:
-    """Eager post-query sanity report, matching the reference's logging
-    (``src/aces/query.py:148-151`` row/subject counts,
-    ``:174-179`` label-uniformity warning). ONE aggregation job over the
-    result — subjects counted with ``approx_count_distinct`` (an exact
-    distinct on 100 TB of output would shuffle every subject_id; ±2% is
-    plenty for a sanity line), labels counted exactly (cardinality is
-    tiny). Returns the stats as a dict; call it on a persisted/written
-    result to avoid recomputing the query."""
+def cohort_stats_aggs(has_label: bool, label_col: str = "label") -> list[Column]:
+    """The cohort sanity aggregates, shared by :func:`report_cohort_stats`
+    and the CLI's observed write: rows, ~subjects (``approx_count_distinct``
+    — an exact distinct on 100 TB of output would shuffle every subject_id,
+    and DISTINCT aggregates are rejected in observed metrics) and, with a
+    label, its min and max (equal ⟺ every label is the same)."""
     aggs = [
         F.count(F.lit(1)).alias("n_rows"),
         F.approx_count_distinct("subject_id").alias("n_subjects"),
     ]
-    has_label = label_col in result.columns
     if has_label:
-        aggs.append(F.countDistinct(F.col(label_col)).alias("n_labels"))
-        aggs.append(F.first(F.col(label_col), ignorenulls=False).alias("first_label"))
-    row = result.agg(*aggs).collect()[0]
-    stats = row.asDict()
+        aggs += [F.min(label_col).alias("label_min"), F.max(label_col).alias("label_max")]
+    return aggs
+
+
+def log_cohort_stats(stats: dict) -> None:
+    """The reference's post-query sanity lines (``src/aces/query.py:148-151``
+    row/subject counts, ``:174-179`` label-uniformity warning) from
+    :func:`cohort_stats_aggs` values."""
     logger.info(
         "Done. %s valid rows returned corresponding to ~%s subjects.",
         f"{stats['n_rows']:,}",
         f"{stats['n_subjects']:,}",
     )
-    if has_label and stats["n_rows"] > 0 and stats["n_labels"] <= 1:
+    if "label_min" in stats and stats["n_rows"] > 0 and stats["label_min"] == stats["label_max"]:
         logger.warning(
             "All labels in the extracted cohort are the same: '%s'. "
             "This may indicate an issue with the task logic. "
             "Please double-check your configuration file if this is not expected.",
-            stats["first_label"],
+            stats["label_min"],
         )
+
+
+def report_cohort_stats(result: DataFrame, label_col: str = "label") -> dict:
+    """Eager post-query sanity report: ONE aggregation job over ``result``
+    computing :func:`cohort_stats_aggs`, logged by
+    :func:`log_cohort_stats`. Returns the stats as a dict. The CLI collects
+    the same aggregates with an ``Observation`` on its write instead of
+    running this second job."""
+    stats = result.agg(*cohort_stats_aggs(label_col in result.columns, label_col)).collect()[0].asDict()
+    log_cohort_stats(stats)
     return stats

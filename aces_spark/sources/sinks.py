@@ -16,8 +16,9 @@ import os
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..utils import ident
 
 MEDS_LABEL_SCHEMA = T.StructType(
     [
@@ -45,23 +46,22 @@ def to_meds_labels(result: DataFrame) -> DataFrame:
     ``index_timestamp`` → ``prediction_time`` and ``label`` →
     ``boolean_value`` (count > 0), add missing optional columns as nulls,
     drop everything else."""
-    if "subject_id" not in result.columns:
+    columns = result.columns
+    if "subject_id" not in columns:
         raise ValueError("Output dataframe is missing a 'subject_id' column.")
 
-    for src, dst in _RENAME.items():
-        if src in result.columns and src != dst:
-            result = result.withColumnRenamed(src, dst)
-
+    source = {_RENAME.get(c, c): c for c in columns}  # output name -> input column
     cols = []
     for field in MEDS_LABEL_SCHEMA.fields:
-        if field.name in result.columns:
-            col = F.col(f"`{field.name}`")
+        sql_type = field.dataType.simpleString()
+        if field.name in source:
+            col = ident(source[field.name])
             if field.name == "boolean_value":
-                col = (col.cast("long") > 0)
-            cols.append(col.cast(field.dataType).alias(field.name))
+                col = f"CAST({col} AS BIGINT) > 0"
+            cols.append(f"CAST({col} AS {sql_type}) AS {ident(field.name)}")
         else:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-    return result.select(*cols)
+            cols.append(f"CAST(NULL AS {sql_type}) AS {ident(field.name)}")
+    return result.selectExpr(*cols)
 
 
 def write_result(
@@ -73,7 +73,9 @@ def write_result(
 ) -> None:
     """Write the cohort result as parquet; optionally as MEDS labels with
     the raw window-struct frame persisted separately
-    (reference ``src/aces/run.py:161-167``)."""
+    (reference ``src/aces/run.py:161-167``). With ``window_stats_path``
+    the labels are written from the window-stats file just written, so
+    ``result`` is computed once."""
     # MEDS timestamps are μs; Spark's default INT96 reads back as nanos.
     # The caller's setting is restored afterwards.
     conf = result.sparkSession.conf
@@ -83,6 +85,7 @@ def write_result(
     try:
         if window_stats_path:
             result.write.mode(mode).parquet(window_stats_path)
+            result = result.sparkSession.read.parquet(window_stats_path)
         out = to_meds_labels(result) if meds_labels else result
         out.write.mode(mode).parquet(output_path)
     finally:

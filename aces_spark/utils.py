@@ -151,6 +151,19 @@ class Node:
         return f"Node({self.name!r}, children={[c.name for c in self._children]})"
 
 
+def ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier. Predicate and window
+    names are ``\\w+`` (so SQL keywords, a leading digit and non-ASCII
+    letters are all legal) and node names contain dots, so the planners
+    quote every name they put in SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(s: str) -> str:
+    """``s`` as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def preorder_iter(node: Node) -> Iterator[Node]:
     """Yield ``node`` and all descendants in pre-order (reference:
     ``bigtree.preorder_iter`` used at ``src/aces/query.py:158``)."""

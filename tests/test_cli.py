@@ -85,6 +85,47 @@ def test_cli_end_to_end_meds_labels(spark, tmp_path, caplog):
     assert any("valid rows returned" in r.message for r in caplog.records)
 
 
+def test_cli_one_job_no_cache(spark, tmp_path, monkeypatch, caplog):
+    """The sanity report is observed on the write's own job, and with
+    --window-stats the labels are read back from the stats file: the
+    extraction caches nothing and runs no Spark job after the label write."""
+    from aces_spark.sources import sinks
+
+    meds = tmp_path / "meds"
+    _write_meds(meds)
+    cfg = tmp_path / "task.yaml"
+    cfg.write_text(TASK_YAML)
+    out = tmp_path / "labels.parquet"
+
+    tracker = spark.sparkContext.statusTracker()
+    last_job_after_write = []
+    write_result = sinks.write_result
+
+    def recording(*args, **kwargs):
+        write_result(*args, **kwargs)
+        last_job_after_write.append(max(tracker.getJobIdsForGroup(), default=-1))
+
+    monkeypatch.setattr(sinks, "write_result", recording)
+    spark.catalog.clearCache()
+    with caplog.at_level(logging.INFO, logger="aces_spark.query"):
+        main(
+            [
+                "--config", str(cfg),
+                "--data", str(meds),
+                "--standard", "meds",
+                "--output", str(out),
+                "--meds-labels",
+                "--window-stats", str(tmp_path / "stats.parquet"),
+            ]
+        )
+    assert last_job_after_write == [max(tracker.getJobIdsForGroup())]
+    assert spark._jsparkSession.sharedState().cacheManager().cachedData().size() == 0
+    labels = spark.read.parquet(str(out))
+    assert {r["subject_id"]: r["boolean_value"] for r in labels.collect()} == {1: True, 2: False}
+    assert any("2 valid rows returned corresponding to ~2 subjects" in r.message for r in caplog.records)
+    assert not any("All labels" in r.message for r in caplog.records)
+
+
 def test_cli_rejects_bad_standard(tmp_path):
     cfg = tmp_path / "task.yaml"
     cfg.write_text(TASK_YAML)

@@ -39,7 +39,7 @@ from aces_spark.types import (
 )
 from aces_spark.utils import preorder_iter
 
-from test_sample_configs import brute_query, engine_rows
+from test_sample_configs import brute_query, engine_rows, write_meds_parquet
 
 US_H = 3_600 * 1_000_000
 N_TREES = 204
@@ -360,6 +360,56 @@ def test_junk_chain_and_hf_plan_single_scan(spark, frames, tmp_path):
     # every kernel orders by the one shared sort column: one ascending and
     # one descending sort, not one per window
     assert counts.get("Sort", 0) <= 2, counts
+    # the window operators Catalyst makes of the five HF windows (the count
+    # the Column-built plan had): building the plan as SQL text changed
+    # nothing that runs
+    assert counts.get("Window", 0) == 6, counts
+
+
+def test_hf_query_py4j_budget(spark, tmp_path, monkeypatch):
+    """query() builds the HF plan in a few hundred py4j round trips: every
+    stage is one selectExpr of SQL text. Built from Column expressions, one
+    call per expression node, it took ~6k."""
+    import gc
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from aces_spark.sources.predicates import get_predicates_df
+
+    hf = _hf_readmission_cfg(tmp_path)
+    DT = datetime.datetime
+    path = tmp_path / "meds.parquet"
+    write_meds_parquet(
+        [
+            (1, DT(2019, 6, 1), "VITALS//HR", None),
+            (1, DT(2020, 1, 1), "ADMISSION//MEDICAL", None),
+            (1, DT(2020, 1, 3), "ICD9CM//428.0", None),
+            (1, DT(2020, 1, 3), "DISCHARGE//HOME", None),
+            (1, DT(2020, 1, 20), "ADMISSION//ED", None),
+            (1, DT(2020, 1, 25), "DISCHARGE//HOME", None),
+            (1, DT(2020, 9, 1), "VITALS//HR", None),
+        ],
+        path,
+    )
+    pred = get_predicates_df(hf, spark, str(path), standard="meds")
+
+    # py4j deletes garbage-collected JVM objects from a thread of its own,
+    # asynchronously: only this thread's round trips are query()'s
+    calls, me = 0, threading.get_ident()
+    send = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    gc.collect()
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    result = query(hf, pred)
+    monkeypatch.undo()
+    assert calls <= 300, calls
+    assert result.count() == 1
 
 
 def test_query_leaves_no_trace(spark, tmp_path):

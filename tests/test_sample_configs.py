@@ -535,3 +535,50 @@ def test_query_idempotency(spark, tmp_path, meds_path):
     first = sorted(map(str, query(cfg, pred_df).collect()))
     second = sorted(map(str, query(cfg, pred_df).collect()))
     assert first == second
+
+
+#: Names that only work quoted: an SQL keyword, a leading digit and a
+#: non-ASCII ``\w`` name as predicates, a keyword as a window name (its
+#: nodes are ``order.start`` / ``order.end``), and a ``has:`` on each.
+QUOTED_NAMES = """\
+predicates:
+  select:
+    code: {regex: ADMISSION//.*}
+  1st_dx:
+    code: lab_name//O2 saturation pulseoxymetry (%)
+  sättigung:
+    code: LAB//hr
+trigger: select
+windows:
+  order:
+    start: trigger
+    end: start + 72h
+    start_inclusive: True
+    end_inclusive: True
+    has:
+      select: (None, 1)
+      1st_dx: (1, None)
+      sättigung: (None, 4)
+    label: 1st_dx
+    index_timestamp: end
+  group:
+    start: order.end
+    end: start -> sättigung
+    start_inclusive: False
+    end_inclusive: True
+    has:
+      1st_dx: (None, 3)
+"""
+
+
+def test_names_needing_quotes_vs_brute_force(spark, tmp_path, meds_path):
+    cfg_path = tmp_path / "quoted.yaml"
+    cfg_path.write_text(QUOTED_NAMES, encoding="utf-8")
+    cfg = TaskExtractorConfig.load(cfg_path)
+
+    cols, node_names, want = brute_query(cfg, make_meds_rows())
+    pred_df = get_predicates_df(cfg, spark, meds_path, standard="meds")
+    got = engine_rows(cfg, query(cfg, pred_df).collect(), cols, node_names)
+
+    assert any(r[1] is not None for r in want), "fixture too sparse for the quoted-names task"
+    assert got == want

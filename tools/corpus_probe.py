@@ -31,7 +31,7 @@ def main() -> int:
         .appName("aces-spark-corpus-probe")
         .config("spark.sql.shuffle.partitions", str(int(cpus) * 2))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", __import__("bench").driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()

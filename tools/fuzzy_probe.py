@@ -55,7 +55,7 @@ def main() -> int:
         .appName("fuzzy-probe")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", __import__("bench").driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()

@@ -47,7 +47,7 @@ def main() -> int:
     spark = (
         SparkSession.builder.master("local[32]")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", __import__("bench").driver_memory())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -44,7 +44,7 @@ def main() -> int:
     spark = (
         SparkSession.builder.master("local[16]")
         .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", __import__("bench").driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()

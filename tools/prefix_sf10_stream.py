@@ -65,7 +65,7 @@ def _spark(app: str):
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(int(cpus) * 2))
-        .config("spark.driver.memory", os.environ.get("ORACLE_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("ORACLE_DRIVER_MEM") or __import__("bench").driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")

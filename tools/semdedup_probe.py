@@ -41,7 +41,7 @@ def main() -> int:
     spark = (
         SparkSession.builder.master("local[32]")
         .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", __import__("bench").driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()

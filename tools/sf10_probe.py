@@ -229,7 +229,7 @@ def main() -> int:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("sf10-probe")
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", os.environ.get("ORACLE_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("ORACLE_DRIVER_MEM") or __import__("bench").driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
