@@ -230,7 +230,6 @@ def _build_session(master: str | None, shuffle_partitions: str | int | None):
     builder = SparkSession.builder.appName("aces-spark")
     if master:
         builder = builder.master(master)
-    builder = builder.config("spark.sql.adaptive.enabled", "true")
     if shuffle_partitions:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return builder.getOrCreate()

@@ -3,7 +3,8 @@
 This is a from-scratch reimplementation of the reference engine's config
 layer (``src/aces/config.py``; key anchors cited per class/method below).
 It is pure Python — no Spark objects are built at config time; predicate
-configs expose a ``spark_expr`` factory the source layer calls.
+configs expose their SQL text (``sql_expr``), which the source layer
+applies.
 
 Grammar summary (reference ``src/aces/config.py:325-349``, ``:647-689``):
 
@@ -25,6 +26,7 @@ from __future__ import annotations
 import dataclasses
 import logging
 import re
+from collections.abc import Callable
 from datetime import timedelta
 from pathlib import Path
 from typing import Any
@@ -38,7 +40,7 @@ from .types import (
     TemporalWindowBounds,
     ToEventWindowBounds,
 )
-from .utils import Node, parse_timedelta
+from .utils import Node, ident, parse_timedelta, sql_literal, sql_str
 
 logger = logging.getLogger(__name__)
 
@@ -58,16 +60,11 @@ class PlainPredicateConfig:
     static: bool = False
     other_cols: dict[str, str] = field(default_factory=dict)
 
-    def spark_expr(self):
-        """Build a boolean pyspark Column evaluating this predicate on a MEDS
-        table with columns ``code`` / ``numeric_value`` (+ any
-        ``other_cols``). Mirrors ``MEDS_eval_expr``
-        (``src/aces/config.py:44-148``); Spark analogs: ``==`` / ``rlike`` /
-        ``isin`` + range comparisons, conjoined."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
+    def sql_expr(self) -> str:
+        """SQL text of this predicate as a boolean over a MEDS table with
+        columns ``code`` / ``numeric_value`` (+ any ``other_cols``). Mirrors
+        ``MEDS_eval_expr`` (``src/aces/config.py:44-148``): ``=`` / ``RLIKE``
+        / ``IN`` plus range comparisons, conjoined."""
         criteria = []
         if isinstance(self.code, dict):
             if len(self.code) > 1:
@@ -81,37 +78,39 @@ class PlainPredicateConfig:
                         f"Invalid specification in the code field! Got: {self.code}. "
                         "Expected a non-empty string for 'regex'."
                     )
-                criteria.append(F.col("code").rlike(self.code["regex"]))
+                criteria.append(f"code RLIKE {sql_str(self.code['regex'])}")
             elif "any" in self.code:
                 if not self.code["any"] or not isinstance(self.code["any"], list):
                     raise ValueError(
                         f"Invalid specification in the code field! Got: {self.code}. "
                         "Expected a list of strings for 'any'."
                     )
-                criteria.append(F.col("code").isin(list(self.code["any"])))
+                criteria.append(f"code IN ({', '.join(map(sql_literal, self.code['any']))})")
             else:
                 raise ValueError(
                     f"Invalid specification in the code field! Got: {self.code}. "
                     "Expected one of 'regex', 'any'."
                 )
         else:
-            criteria.append(F.col("code") == self.code)
+            criteria.append(f"code = {sql_literal(self.code)}")
 
         if self.value_min is not None:
-            if self.value_min_inclusive:
-                criteria.append(F.col("numeric_value") >= self.value_min)
-            else:
-                criteria.append(F.col("numeric_value") > self.value_min)
+            op = ">=" if self.value_min_inclusive else ">"
+            criteria.append(f"numeric_value {op} {sql_literal(self.value_min)}")
         if self.value_max is not None:
-            if self.value_max_inclusive:
-                criteria.append(F.col("numeric_value") <= self.value_max)
-            else:
-                criteria.append(F.col("numeric_value") < self.value_max)
+            op = "<=" if self.value_max_inclusive else "<"
+            criteria.append(f"numeric_value {op} {sql_literal(self.value_max)}")
 
         for col, value in self.other_cols.items():
-            criteria.append(F.col(col) == value)
+            criteria.append(f"{ident(col)} = {sql_literal(value)}")
 
-        return reduce(lambda a, b: a & b, criteria)
+        return " AND ".join(f"({c})" for c in criteria)
+
+    def spark_expr(self):
+        """:meth:`sql_expr` as a boolean pyspark Column."""
+        from pyspark.sql import functions as F
+
+        return F.expr(self.sql_expr())
 
     def esgpt_spark_expr(self, values_column: str | None = None):
         """Boolean pyspark Column evaluating this predicate on one ESGPT
@@ -179,16 +178,6 @@ class PlainPredicateConfig:
     def is_plain(self) -> bool:
         return True
 
-    @property
-    def source_columns(self) -> list[str]:
-        """Source columns this predicate reads — enables column pruning at
-        the scan (reference prunes at ``src/aces/predicates.py:285``)."""
-        cols = ["code"]
-        if self.value_min is not None or self.value_max is not None:
-            cols.append("numeric_value")
-        cols.extend(self.other_cols.keys())
-        return cols
-
 
 @dataclasses.dataclass
 class DerivedPredicateConfig:
@@ -218,18 +207,19 @@ class DerivedPredicateConfig:
                 f"(comma separated). Got: '{self.expr}'"
             )
 
-    def spark_expr(self):
-        """Boolean Column over predicate-count columns: all/any of
-        ``col(p) > 0`` (reference ``eval_expr``,
-        ``src/aces/config.py:295-311``)."""
-        from functools import reduce
+    def sql_expr(self, count: Callable[[str], str] = ident) -> str:
+        """SQL text: all/any of ``count(p) > 0`` over the input predicates
+        (reference ``eval_expr``, ``src/aces/config.py:295-311``).
+        ``count(name)`` is the SQL text of predicate ``name``'s count."""
+        op = " AND " if self.is_and else " OR "
+        return op.join(f"({count(p)}) > 0" for p in self.input_predicates)
 
+    def spark_expr(self):
+        """:meth:`sql_expr` over the predicate-count columns, as a boolean
+        pyspark Column."""
         from pyspark.sql import functions as F
 
-        terms = [F.col(p) > 0 for p in self.input_predicates]
-        if self.is_and:
-            return reduce(lambda a, b: a & b, terms)
-        return reduce(lambda a, b: a | b, terms)
+        return F.expr(self.sql_expr())
 
     @property
     def is_plain(self) -> bool:
@@ -753,6 +743,33 @@ class TaskExtractorConfig:
     @property
     def plain_predicates(self) -> dict[str, PlainPredicateConfig]:
         return {p: cfg for p, cfg in self.predicates.items() if cfg.is_plain}
+
+    @property
+    def reads_every_event(self) -> bool:
+        """Whether an event that matches no plain predicate can change this
+        task's output. Such an event adds 0 to every count and is never a
+        trigger or a boundary, so it matters only where the task reads row
+        existence:
+
+        * the trigger, a ``has:`` key or an event bound names
+          ``_ANY_EVENT`` (``*``), ``_RECORD_START`` or ``_RECORD_END``
+          (a ``NULL`` window start or end is an event bound on the record
+          start or end: the subject's first or last event of any kind);
+        * a derived predicate reads a static one, whose per-subject
+          broadcast makes it non-zero on rows where no plain predicate is.
+
+        When it is false, the MEDS and direct loaders drop those events
+        before the subject exchange."""
+        special = {ANY_EVENT_COLUMN, START_OF_RECORD_KEY, END_OF_RECORD_KEY, "*"}
+        if self.trigger.predicate in special:
+            return True
+        for w in self.windows.values():
+            bounds = (w.start_endpoint_expr, w.end_endpoint_expr)
+            events = {b.end_event.lstrip("-") for b in bounds if isinstance(b, ToEventWindowBounds)}
+            if special & (set(w.has or ()) | events):
+                return True
+        static = {p for p, c in self.plain_predicates.items() if c.static}
+        return any(static & set(d.input_predicates) for d in self.derived_predicates.values())
 
     @property
     def derived_predicates(self) -> dict[str, DerivedPredicateConfig]:

@@ -13,7 +13,7 @@ Supported standards (dispatch mirrors ``src/aces/predicates.py:693-715``):
 * ``direct`` — user-supplied predicate-count table as CSV or parquet
   (reference ``:21-226``).
 * ``meds`` — MEDS event parquet (``subject_id, time, code, numeric_value``),
-  predicates evaluated as boolean Column expressions
+  predicates evaluated as boolean SQL expressions
   (reference ``:229-288``). A directory of shards is read as ONE Spark scan
   (shards become input splits) — the reference's per-shard Hydra multirun
   (``src/aces/configs/data/sharded.yaml``) collapses into native
@@ -28,6 +28,22 @@ Scale notes: only the source columns referenced by some predicate are
 selected before any compute (column pruning reaches the parquet scan), the
 event-collapse ``groupBy(subject_id, timestamp)`` is the pipeline's single
 required shuffle, and everything downstream reuses that hash partitioning.
+
+Row filter. An event that matches no plain predicate adds 0 to every count
+and is never a trigger or a boundary; it matters only when the task reads
+row existence (:attr:`TaskExtractorConfig.reads_every_event
+<aces_spark.config.TaskExtractorConfig.reads_every_event>`: the trigger, a
+``has:`` key or an event bound names ``_ANY_EVENT``, ``_RECORD_START`` or
+``_RECORD_END``; a window starts or ends at ``NULL``; or a derived predicate
+reads a static one). Otherwise the MEDS and direct loaders keep only
+null-timestamp rows and rows where some plain predicate is non-zero, in the
+scan stage before the exchange, so only the events a task can read are
+shuffled. ESGPT has no collapse and keeps every row.
+
+The loaders are SQL text applied with ``selectExpr`` (one py4j round trip
+per stage and item, not one per expression node), as the planner is: the
+plain-predicate projection, the collapse aggregates, derived predicates
+with the static broadcast, and the ``_ANY_EVENT`` / record-flag columns.
 """
 
 from __future__ import annotations
@@ -35,7 +51,7 @@ from __future__ import annotations
 import logging
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import TaskExtractorConfig
@@ -45,8 +61,33 @@ from ..types import (
     PRED_CNT_TYPE,
     START_OF_RECORD_KEY,
 )
+from ..utils import ident, sql_str
 
 logger = logging.getLogger(__name__)
+
+
+def _collapse(data: DataFrame, predicates: list[str], every_event: bool) -> DataFrame:
+    """The MEDS and direct loaders' shared tail: the row filter (unless
+    ``every_event``), the engine's one exchange, and the
+    ``(subject_id, timestamp)`` collapse summing counts, where an all-null
+    group sums to 0 (the reference's Polars sum).
+
+    ONE exchange for the whole engine: hash-partitioning by subject_id
+    satisfies the (subject_id, timestamp) clustering the collapse needs,
+    and every downstream window is keyed by subject_id, so no further
+    shuffle is ever required (SURVEY §4: "embarrassingly parallel by
+    subject"). The filter sits before it, in the scan stage."""
+    if not every_event:
+        keep = ["`timestamp` IS NULL", *(f"{ident(c)} <> 0" for c in predicates)]
+        data = data.filter(" OR ".join(keep))
+    # df["name"] is one py4j round trip, F.col(name) three
+    subject, ts = data["subject_id"], data["timestamp"]
+    sums = [f"CAST(coalesce(sum({ident(c)}), 0) AS {PRED_CNT_TYPE}) AS {ident(c)}" for c in predicates]
+    out = data.repartition(subject).groupBy(subject, ts).agg(*map(F.expr, sums))
+    # unique keys by construction (the collapse) — lets query()'s
+    # default-on uniqueness validation skip its aggregation pass
+    out._aces_keys_unique = True
+    return out
 
 
 def direct_load_plain_predicates(
@@ -54,11 +95,13 @@ def direct_load_plain_predicates(
     data_path: str | Path,
     predicates: list[str],
     ts_format: str | None,
+    every_event: bool = True,
 ) -> DataFrame:
     """Load a user-supplied predicates table (reference
     ``src/aces/predicates.py:21-226``): validate columns, parse string
     timestamps with ``ts_format``, and collapse duplicate
-    ``(subject_id, timestamp)`` rows by summing counts."""
+    ``(subject_id, timestamp)`` rows by summing counts (see
+    :func:`_collapse` for ``every_event``)."""
     data_path = Path(data_path)
     if not data_path.is_file() and not data_path.is_dir():
         raise FileNotFoundError(f"Direct predicates file {data_path} does not exist!")
@@ -71,40 +114,27 @@ def direct_load_plain_predicates(
         case _:
             raise ValueError(f"Unsupported file format: {data_path.suffix}")
 
-    columns = ["subject_id", "timestamp", *predicates]
-    missing_columns = [col for col in columns if col not in data.columns]
+    dtypes = dict(data.dtypes)
+    missing_columns = [col for col in ["subject_id", "timestamp", *predicates] if col not in dtypes]
     if missing_columns:
         raise ValueError(f"Missing columns: {missing_columns}")
 
-    data = data.select(*columns)
-    ts_type = dict(data.dtypes)["timestamp"]
+    ts, ts_type = ident("timestamp"), dtypes["timestamp"]
     if ts_type == "string":
         if ts_format is None:
             raise ValueError("Must provide a timestamp format for direct predicates with str timestamps.")
-        data = data.withColumn(
-            "timestamp", strptime_timestamp(F.col("timestamp"), ts_format)
-        )
+        ts = strptime_sql(ts, ts_format)
     elif ts_type.startswith("timestamp") or ts_type == "date":
         if ts_format is not None:
             logger.info("Ignoring timestamp format %s; timestamps are already %s", ts_format, ts_type)
-        data = data.withColumn("timestamp", F.col("timestamp").cast("timestamp"))
+        ts = f"CAST({ts} AS TIMESTAMP)"
     else:
         raise TypeError(f"Passed predicates have timestamps of invalid type {ts_type}.")
 
-    # ONE exchange for the whole engine: hash-partitioning by subject_id
-    # satisfies the (subject_id, timestamp) clustering the collapse needs,
-    # and every downstream window/groupBy/join is keyed by subject_id, so
-    # no further shuffle is ever required (SURVEY §4: "embarrassingly
-    # parallel by subject").
-    out = (
-        data.withColumn("subject_id", F.col("subject_id").cast("long"))
-        .repartition("subject_id")
-        .groupBy("subject_id", "timestamp")
-        .agg(*[F.sum(F.col(c)).cast(PRED_CNT_TYPE).alias(c) for c in predicates])
+    data = data.selectExpr(
+        "CAST(subject_id AS BIGINT) AS subject_id", f"{ts} AS `timestamp`", *map(ident, predicates)
     )
-    # unique keys by construction (the collapse), as for MEDS below
-    out._aces_keys_unique = True
-    return out
+    return _collapse(data, predicates, every_event)
 
 
 #: lenient English day-name token (``Mon``/``Monday``/…, any case) used to
@@ -134,18 +164,19 @@ def _strip_day_directives(fmt: str) -> tuple[str, bool]:
     return "".join(out), had
 
 
-def strptime_timestamp(col: Column, ts_format: str) -> Column:
-    """Parse a string column with a strptime-style format, including
-    ``%a``/``%A``: Spark's >=3.0 parser cannot *parse* day-of-week fields
-    (EEE/EEEE are format-only), so the day-name token — redundant with the
-    date it accompanies — is stripped from the data and the directive from
-    the format, then the rest parses normally. Lenient like the reference's
-    Polars path (`/root/reference/src/aces/predicates.py:211`): the day
-    name is not cross-validated against the parsed date."""
+def strptime_sql(col: str, ts_format: str) -> str:
+    """SQL text parsing the string column ``col`` (SQL text) with a
+    strptime-style format, including ``%a``/``%A``: Spark's >=3.0 parser
+    cannot *parse* day-of-week fields (EEE/EEEE are format-only), so the
+    day-name token — redundant with the date it accompanies — is stripped
+    from the data and the directive from the format, then the rest parses
+    normally. Lenient like the reference's Polars path
+    (``src/aces/predicates.py:211``): the day name is not
+    cross-validated against the parsed date."""
     fmt, had_day = _strip_day_directives(ts_format)
     if had_day:
-        col = F.regexp_replace(col, _DAY_NAME_RE, "")
-    return F.to_timestamp(col, _strptime_to_spark(fmt))
+        col = f"regexp_replace({col}, {sql_str(_DAY_NAME_RE)}, '')"
+    return f"to_timestamp({col}, {sql_str(_strptime_to_spark(fmt))})"
 
 
 def _strptime_to_spark(fmt: str) -> str:
@@ -172,7 +203,7 @@ def _strptime_to_spark(fmt: str) -> str:
         "%S": "s",
         "%f": "SSSSSS",
         # NOTE: no %a/%A here — Spark's >=3.0 parser REJECTS EEE/EEEE for
-        # parsing (format-only patterns); strptime_timestamp() handles
+        # parsing (format-only patterns); strptime_sql() handles
         # them by stripping the redundant day-name token pre-parse
         "%b": "MMM",
         "%B": "MMMM",
@@ -225,11 +256,12 @@ def generate_plain_predicates_from_meds(
     spark: SparkSession,
     data_path: str | Path,
     predicates: dict,
+    every_event: bool = True,
 ) -> DataFrame:
     """MEDS parquet → predicate counts (reference
     ``src/aces/predicates.py:229-288``): rename ``time`` → ``timestamp``,
-    evaluate each plain predicate as a boolean Column over
-    ``code``/``numeric_value``, and collapse per ``(subject_id, timestamp)``.
+    evaluate each plain predicate over ``code``/``numeric_value``, and
+    collapse per ``(subject_id, timestamp)``.
 
     ``data_path`` may be a single parquet file, a shard directory, or a
     glob — all become one distributed scan.
@@ -237,43 +269,30 @@ def generate_plain_predicates_from_meds(
     # MEDS shard directories nest (train/0, held_out/0/0, ...); recurse so
     # one scan covers the whole dataset (shards become input splits)
     data = spark.read.option("recursiveFileLookup", "true").parquet(str(data_path))
-    return plain_predicates_from_meds_df(data, predicates)
+    return plain_predicates_from_meds_df(data, predicates, every_event)
 
 
-def plain_predicates_from_meds_df(data: DataFrame, predicates: dict) -> DataFrame:
+def plain_predicates_from_meds_df(
+    data: DataFrame, predicates: dict, every_event: bool = True
+) -> DataFrame:
     """Evaluate plain predicates over an already-loaded MEDS-shaped
     DataFrame (``subject_id, time|timestamp, code, numeric_value, ...``)
-    and collapse per ``(subject_id, timestamp)``."""
-    if "time" in data.columns and "timestamp" not in data.columns:
-        data = data.withColumnRenamed("time", "timestamp")
-
-    # column pruning: only read source columns some predicate references
-    needed = {"subject_id", "timestamp"}
-    for p in predicates.values():
-        needed.update(p.source_columns)
-    data = data.select(*[c for c in data.columns if c in needed])
-    data = data.withColumn("code", F.col("code").cast("string"))
-
-    pred_exprs = {
-        name: F.coalesce(p.spark_expr().cast(PRED_CNT_TYPE), F.lit(0)).alias(name)
-        for name, p in predicates.items()
-    }
-    data = data.select(
-        F.col("subject_id").cast("long").alias("subject_id"),
-        F.col("timestamp").cast("timestamp").alias("timestamp"),
-        *pred_exprs.values(),
+    and collapse per ``(subject_id, timestamp)`` (see :func:`_collapse`
+    for ``every_event``). The one projection reads only the source columns
+    some predicate references, so column pruning reaches the scan."""
+    dtypes = dict(data.dtypes)
+    ts = "time" if "time" in dtypes and "timestamp" not in dtypes else "timestamp"
+    if dtypes.get("code", "string") != "string":
+        data = data.withColumn("code", F.expr("CAST(code AS STRING)"))
+    data = data.selectExpr(
+        "CAST(subject_id AS BIGINT) AS subject_id",
+        f"CAST({ident(ts)} AS TIMESTAMP) AS `timestamp`",
+        *[
+            f"coalesce(CAST(({p.sql_expr()}) AS {PRED_CNT_TYPE}), 0) AS {ident(name)}"
+            for name, p in predicates.items()
+        ],
     )
-
-    # single-exchange strategy: partition by subject_id once; the
-    # (subject_id, timestamp) collapse then aggregates partition-locally
-    # and all downstream per-subject windows reuse the same partitioning
-    out = data.repartition("subject_id").groupBy("subject_id", "timestamp").agg(
-        *[F.coalesce(F.sum(F.col(c)), F.lit(0)).cast(PRED_CNT_TYPE).alias(c) for c in predicates]
-    )
-    # unique keys by construction (the collapse) — lets query()'s
-    # default-on uniqueness validation skip its aggregation pass
-    out._aces_keys_unique = True
-    return out
+    return _collapse(data, list(predicates), every_event)
 
 
 def process_esgpt_data(
@@ -404,19 +423,22 @@ def get_predicates_df(
     value_columns: dict[str, str | None] | None = None,
 ) -> DataFrame:
     """Build the full predicates DataFrame for a task config (reference
-    ``src/aces/predicates.py:677-792``): load plain predicates, evaluate
-    derived predicates in topological order (propagating static values
-    per subject first where needed), and synthesize the special
-    ``_ANY_EVENT`` / ``_RECORD_START`` / ``_RECORD_END`` columns on demand.
+    ``src/aces/predicates.py:677-792``): load plain predicates (dropping
+    the events no predicate matches unless ``cfg.reads_every_event``; see
+    the module docstring), evaluate derived predicates in topological order
+    (propagating static values per subject first where needed), and
+    synthesize the special ``_ANY_EVENT`` / ``_RECORD_START`` /
+    ``_RECORD_END`` columns on demand, in one projection.
     """
     plain_predicates = cfg.plain_predicates
+    every_event = cfg.reads_every_event
     match standard.lower():
         case "direct":
             data = direct_load_plain_predicates(
-                spark, data_path, list(plain_predicates.keys()), ts_format
+                spark, data_path, list(plain_predicates.keys()), ts_format, every_event
             )
         case "meds":
-            data = generate_plain_predicates_from_meds(spark, data_path, plain_predicates)
+            data = generate_plain_predicates_from_meds(spark, data_path, plain_predicates, every_event)
         case "esgpt":
             data = generate_plain_predicates_from_esgpt(
                 spark, data_path, plain_predicates, value_columns
@@ -429,58 +451,49 @@ def get_predicates_df(
     # timestamp); ESGPT events are not collapsed, so query() must check them
     keys_unique = getattr(data, "_aces_keys_unique", False)
 
-    w_subj = Window.partitionBy("subject_id")
-    # deterministic "first row" per subject = null-timestamp row first, then
-    # earliest event (reference sorts nulls-first then takes first();
-    # src/aces/predicates.py:718, :727-729)
-    w_first = (
-        Window.partitionBy("subject_id")
-        .orderBy(F.col("timestamp").asc_nulls_first())
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
+    # {column: SQL text} of the columns added, and of those replaced in place
+    texts: dict[str, str] = {}
 
     # derived predicates in topological order (src/aces/predicates.py:722-736)
     static_variables = [p for p, c in plain_predicates.items() if c.static]
-    for name, code in cfg.derived_predicates.items():
-        if any(x in static_variables for x in code.input_predicates):
-            # broadcast each subject's static value to all its rows
-            data = data.withColumns(
-                {sv: F.first(F.col(sv)).over(w_first) for sv in static_variables}
-            )
-        data = data.withColumn(name, code.spark_expr().cast(PRED_CNT_TYPE))
+    derived = cfg.derived_predicates
+    if any(x in static_variables for d in derived.values() for x in d.input_predicates):
+        # broadcast each subject's static value to all its rows; the
+        # deterministic "first row" per subject is the null-timestamp row,
+        # then the earliest event (src/aces/predicates.py:718, :727-729)
+        w_first = (
+            "OVER (PARTITION BY subject_id ORDER BY `timestamp` ASC NULLS FIRST "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
+        )
+        texts.update({sv: f"first({ident(sv)}) {w_first}" for sv in static_variables})
+    for name, code in derived.items():
+        # nested derived predicates read their inputs' text inline
+        inline = code.sql_expr(lambda p: texts.get(p, ident(p)))
+        texts[name] = f"CAST({inline} AS {PRED_CNT_TYPE})"
 
     # special predicate columns, synthesized only if referenced
     # (src/aces/predicates.py:742-789)
-    special_predicates: list[str] = []
+    special = {ANY_EVENT_COLUMN, START_OF_RECORD_KEY, END_OF_RECORD_KEY} & {cfg.trigger.predicate}
     for window in cfg.windows.values():
-        if ANY_EVENT_COLUMN in window.referenced_predicates and ANY_EVENT_COLUMN not in special_predicates:
-            special_predicates.append(ANY_EVENT_COLUMN)
-        for key in (START_OF_RECORD_KEY, END_OF_RECORD_KEY):
-            if key in window.constraint_predicates and key not in special_predicates:
-                special_predicates.append(key)
-    if (
-        cfg.trigger.predicate in (ANY_EVENT_COLUMN, START_OF_RECORD_KEY, END_OF_RECORD_KEY)
-        and cfg.trigger.predicate not in special_predicates
+        special |= {ANY_EVENT_COLUMN} & window.referenced_predicates
+        special |= {START_OF_RECORD_KEY, END_OF_RECORD_KEY} & window.constraint_predicates
+    ts, w_subj = ident("timestamp"), "OVER (PARTITION BY subject_id)"
+    for key, text in (
+        (ANY_EVENT_COLUMN, f"CASE WHEN {ts} IS NOT NULL THEN 1 END"),
+        (START_OF_RECORD_KEY, f"{ts} = min({ts}) {w_subj}"),
+        (END_OF_RECORD_KEY, f"{ts} = max({ts}) {w_subj}"),
     ):
-        special_predicates.append(cfg.trigger.predicate)
+        if key in special:
+            texts[key] = f"CAST({text} AS {PRED_CNT_TYPE})"
 
-    if ANY_EVENT_COLUMN in special_predicates:
-        data = data.withColumn(
-            ANY_EVENT_COLUMN,
-            F.when(F.col("timestamp").isNotNull(), F.lit(1)).cast(PRED_CNT_TYPE),
-        )
-    if START_OF_RECORD_KEY in special_predicates:
-        data = data.withColumn(
-            START_OF_RECORD_KEY,
-            (F.col("timestamp") == F.min("timestamp").over(w_subj)).cast(PRED_CNT_TYPE),
-        )
-    if END_OF_RECORD_KEY in special_predicates:
-        data = data.withColumn(
-            END_OF_RECORD_KEY,
-            (F.col("timestamp") == F.max("timestamp").over(w_subj)).cast(PRED_CNT_TYPE),
-        )
-
+    if not texts:
+        return data
+    # one projection; a replaced column keeps its place, as with withColumn
+    kept = ["*"]
+    if texts.keys() & set(plain_predicates):
+        kept = [f"{texts.pop(c, ident(c))} AS {ident(c)}" for c in data.columns]
+    data = data.selectExpr(*kept, *[f"{text} AS {ident(name)}" for name, text in texts.items()])
     # the tag lets query()'s default-on uniqueness validation skip a
-    # redundant aggregation pass; withColumn returned new frames, so re-tag
+    # redundant aggregation pass; selectExpr returned a new frame, so re-tag
     data._aces_keys_unique = keys_unique
     return data

@@ -11,6 +11,7 @@ Reimplements (from public knowledge, no code copied):
 
 from __future__ import annotations
 
+import math
 import re
 from collections.abc import Iterator
 from datetime import timedelta
@@ -162,6 +163,19 @@ def ident(name: str) -> str:
 def sql_str(s: str) -> str:
     """``s`` as a SQL string literal."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_literal(v) -> str:
+    """A config value as the SQL literal ``F.lit(v)`` would make: ints stay
+    integral, floats are doubles (``D`` suffix; the bare ``1.5`` is a
+    decimal), anything else is a string."""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return f"{v!r}D" if math.isfinite(v) else f"CAST('{v}' AS DOUBLE)"
+    return sql_str(str(v))
 
 
 def preorder_iter(node: Node) -> Iterator[Node]:

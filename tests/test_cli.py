@@ -126,6 +126,21 @@ def test_cli_one_job_no_cache(spark, tmp_path, monkeypatch, caplog):
     assert not any("All labels" in r.message for r in caplog.records)
 
 
+def test_build_session_keeps_callers_aqe(spark):
+    """On an existing session the CLI's builder writes its options into the
+    caller's conf, so it sets none the caller may have chosen (AQE is on by
+    Spark's default)."""
+    from aces_spark.cli import _build_session
+
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert _build_session(None, None).conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_cli_rejects_bad_standard(tmp_path):
     cfg = tmp_path / "task.yaml"
     cfg.write_text(TASK_YAML)

@@ -10,7 +10,9 @@ window's event-bound end), offsets accumulated into event-bound edges
 (``start + Nh`` then ``start -> p``, ``REF ± Nh`` root sides), ``start: NULL``
 and ``end: null`` record bounds, ``(None, 0)`` anti-constraints and pure
 chains whose event-bound leaf never resolves (the ``(subject, null)`` junk
-row). ``test_generator_coverage`` pins that coverage.
+row). ``test_generator_coverage`` pins that coverage. A subset of the trees
+also runs through the MEDS loader, whose row filter drops the generator's
+``OTHER`` events whenever the tree reads no row existence.
 """
 
 from __future__ import annotations
@@ -31,6 +33,7 @@ from aces_spark.config import (
     WindowConfig,
 )
 from aces_spark.query import query
+from aces_spark.sources.predicates import get_predicates_df
 from aces_spark.types import (
     ANY_EVENT_COLUMN,
     END_OF_RECORD_KEY,
@@ -229,6 +232,58 @@ def test_random_trees_match_oracle(frames, batch):
     assert not mismatches, "\n".join(mismatches)
 
 
+#: trees that also run through the MEDS loader, in batches of six
+LOADER_SEEDS = range(0, 24 * 8, 8)
+LOADER_BATCHES = 4
+
+
+@pytest.fixture(scope="module")
+def meds_paths(tmp_path_factory):
+    root = tmp_path_factory.mktemp("random_tree_meds")
+    paths = {s: root / f"{s}.parquet" for s in range(DATA_SEEDS)}
+    for s, path in paths.items():
+        write_meds_parquet(meds_rows(s), path)
+    return paths
+
+
+def _loader_tree_mismatch(spark, meds_paths, seed: int) -> str | None:
+    """The whole query() output over the loaded MEDS file, every summary
+    struct included, against the oracle over the raw rows."""
+    cfg = random_task(seed)
+    data_seed = seed % DATA_SEEDS
+    cols, node_names, want = brute_query(cfg, meds_rows(data_seed))
+    pred = get_predicates_df(cfg, spark, meds_paths[data_seed], standard="meds")
+    got = engine_rows(cfg, query(cfg, pred).collect(), cols, node_names)
+    if got == want:
+        return None
+    return (
+        f"tree seed {seed} (reads_every_event={cfg.reads_every_event}): "
+        f"{len(got - want)} extra, {len(want - got)} missing; {cfg.windows}"
+    )
+
+
+@pytest.mark.parametrize("batch", range(LOADER_BATCHES))
+def test_loader_trees_match_oracle(spark, meds_paths, batch):
+    seeds = LOADER_SEEDS[batch::LOADER_BATCHES]
+    with ThreadPoolExecutor(4) as pool:
+        results = list(pool.map(lambda s: _loader_tree_mismatch(spark, meds_paths, s), seeds))
+    mismatches = [r for r in results if r is not None]
+    assert not mismatches, "\n".join(mismatches)
+
+
+def test_loader_trees_take_both_paths(spark, meds_paths):
+    """The loader-path trees include some that read row existence (every
+    event kept) and some that do not (OTHER events dropped before the
+    exchange), and the drop really removes rows."""
+    pruned = [s for s in LOADER_SEEDS if not random_task(s).reads_every_event]
+    assert pruned and len(pruned) < len(LOADER_SEEDS), pruned
+    seed = pruned[0]
+    data_seed = seed % DATA_SEEDS
+    keys = {(sid, ts) for sid, ts, _, _ in meds_rows(data_seed)}
+    pred = get_predicates_df(random_task(seed), spark, meds_paths[data_seed], standard="meds")
+    assert 0 < pred.count() < len(keys)
+
+
 def test_generator_coverage():
     """The seeded trees cover every shape the planner special-cases, and
     enough of them produce rows, hop rows and junk rows to mean something."""
@@ -366,20 +421,33 @@ def test_junk_chain_and_hf_plan_single_scan(spark, frames, tmp_path):
     assert counts.get("Window", 0) == 6, counts
 
 
-def test_hf_query_py4j_budget(spark, tmp_path, monkeypatch):
-    """query() builds the HF plan in a few hundred py4j round trips: every
-    stage is one selectExpr of SQL text. Built from Column expressions, one
-    call per expression node, it took ~6k."""
+def _py4j_calls(monkeypatch, fn):
+    """``fn()`` and the py4j round trips this thread made while it ran.
+    py4j deletes garbage-collected JVM objects from a thread of its own,
+    asynchronously: only this thread's round trips are ``fn``'s."""
     import gc
     import threading
 
     from py4j.clientserver import ClientServerConnection
 
-    from aces_spark.sources.predicates import get_predicates_df
+    calls, me = 0, threading.get_ident()
+    send = ClientServerConnection.send_command
 
-    hf = _hf_readmission_cfg(tmp_path)
+    def counting(self, *args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    gc.collect()
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    try:
+        return fn(), calls
+    finally:
+        monkeypatch.undo()
+
+
+def _hf_meds(path):
     DT = datetime.datetime
-    path = tmp_path / "meds.parquet"
     write_meds_parquet(
         [
             (1, DT(2019, 6, 1), "VITALS//HR", None),
@@ -392,24 +460,85 @@ def test_hf_query_py4j_budget(spark, tmp_path, monkeypatch):
         ],
         path,
     )
-    pred = get_predicates_df(hf, spark, str(path), standard="meds")
+    return str(path)
 
-    # py4j deletes garbage-collected JVM objects from a thread of its own,
-    # asynchronously: only this thread's round trips are query()'s
-    calls, me = 0, threading.get_ident()
-    send = ClientServerConnection.send_command
 
-    def counting(self, *args, **kwargs):
-        nonlocal calls
-        calls += threading.get_ident() == me
-        return send(self, *args, **kwargs)
-
-    gc.collect()
-    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
-    result = query(hf, pred)
-    monkeypatch.undo()
+def test_hf_query_py4j_budget(spark, tmp_path, monkeypatch):
+    """query() builds the HF plan in a few hundred py4j round trips: every
+    stage is one selectExpr of SQL text. Built from Column expressions, one
+    call per expression node, it took ~6k."""
+    hf = _hf_readmission_cfg(tmp_path)
+    pred = get_predicates_df(hf, spark, _hf_meds(tmp_path / "meds.parquet"), standard="meds")
+    result, calls = _py4j_calls(monkeypatch, lambda: query(hf, pred))
     assert calls <= 300, calls
     assert result.count() == 1
+
+
+def test_hf_loader_py4j_budget(spark, tmp_path, monkeypatch):
+    """The MEDS loader is SQL text too: the HF predicates frame takes a few
+    dozen py4j round trips (~580 when every predicate, derived and special
+    column was a Column expression)."""
+    hf = _hf_readmission_cfg(tmp_path)
+    path = _hf_meds(tmp_path / "meds.parquet")
+    pred, calls = _py4j_calls(
+        monkeypatch, lambda: get_predicates_df(hf, spark, path, standard="meds")
+    )
+    assert calls <= 60, calls
+    assert pred.count() == 6
+
+
+def _plan_ops(df) -> list[str]:
+    """The operators of ``df``'s executed plan, top down (the loader's plan
+    is a chain, so list order is tree depth)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"^[\s:+-]*(?:\*\(\d+\) )?(\w+)", plan, re.MULTILINE)
+
+
+def test_loader_filter_below_the_exchange(spark, tmp_path):
+    """A task that reads no row existence drops predicate-free events in the
+    scan stage, below the one exchange; the HF task reads _ANY_EVENT and
+    NULL-bounded windows, so its loader keeps every event and filters
+    nothing."""
+    flagship_shaped = TaskExtractorConfig(
+        predicates={"hr": PlainPredicateConfig("HR"), "o2_lab": PlainPredicateConfig("O2")},
+        trigger=EventConfig("hr"),
+        windows={
+            "obs": WindowConfig(
+                start="trigger", end="start + 24h",
+                start_inclusive=True, end_inclusive=True, has={"o2_lab": "(1, None)"},
+            ),
+            "fu": WindowConfig(
+                start="obs.end", end="start -> o2_lab",
+                start_inclusive=False, end_inclusive=True, label="hr",
+            ),
+        },
+    )
+    assert not flagship_shaped.reads_every_event
+    DT = datetime.datetime
+    path = tmp_path / "meds.parquet"
+    write_meds_parquet(
+        [
+            (1, None, "GENDER//F", None),
+            (1, DT(2020, 1, 1), "HR", 80.0),
+            (1, DT(2020, 1, 1, 6), "O2", 97.0),
+            (1, DT(2020, 1, 2), "OTHER", None),
+        ],
+        path,
+    )
+    pred = get_predicates_df(flagship_shaped, spark, str(path), standard="meds")
+    ops = _plan_ops(pred)
+    assert ops.count("Exchange") == 1, ops
+    assert "Filter" in ops and ops.index("Filter") > ops.index("Exchange"), ops
+    # the static row stays, the OTHER event goes
+    assert sorted((r["timestamp"] is None, r["hr"], r["o2_lab"]) for r in pred.collect()) == [
+        (False, 0, 1), (False, 1, 0), (True, 0, 0)
+    ]
+
+    hf = _hf_readmission_cfg(tmp_path)
+    assert hf.reads_every_event
+    ops = _plan_ops(get_predicates_df(hf, spark, _hf_meds(tmp_path / "hf.parquet"), standard="meds"))
+    assert ops.count("Exchange") == 1, ops
+    assert "Filter" not in ops, ops
 
 
 def test_query_leaves_no_trace(spark, tmp_path):

@@ -116,7 +116,7 @@ def test_strptime_translation_and_errors():
     assert _strptime_to_spark("%Y %z") == "yyyy xx"
     with pytest.raises(ValueError, match="Unsupported strptime directive '%Q'"):
         _strptime_to_spark("%Q:%M")
-    # %a/%A never reach the translator: strptime_timestamp strips them
+    # %a/%A never reach the translator: strptime_sql strips them
     # (Spark's parser is format-only for EEE/EEEE), so the raw translator
     # still treats them as unknown
     with pytest.raises(ValueError, match="Unsupported strptime directive '%a'"):
@@ -210,3 +210,27 @@ def test_direct_load_literal_text_format(spark, tmp_path):
     rows = sorted((r["subject_id"], r["timestamp"], r["a"]) for r in df.collect())
     assert rows[0][1] == DT(2020, 1, 2, 3, 4, 5)
     assert [r[2] for r in rows] == [1, 0]
+
+
+def test_direct_load_empty_count_is_zero(spark, tmp_path):
+    """An empty count cell collapses to 0, as in the MEDS loader. A null
+    would make the boundary row's running sum null, so the event-bound fill
+    would skip that boundary and count up to the next one."""
+    from aces_spark import ToEventWindowBounds, aggregate_event_bound_window
+    from aces_spark.sources.predicates import direct_load_plain_predicates
+
+    def a_counts(day2: str) -> list[int]:
+        csv = tmp_path / f"counts_{day2 or 'empty'}.csv"
+        csv.write_text(
+            "subject_id,timestamp,a,b\n"
+            "1,01/01/2020 00:00,1,0\n"
+            f"1,01/02/2020 00:00,{day2},1\n"
+            "1,01/03/2020 00:00,1,0\n"
+            "1,01/04/2020 00:00,1,1\n"
+        )
+        df = direct_load_plain_predicates(spark, csv, ["a", "b"], ts_format="%m/%d/%Y %H:%M")
+        assert df.filter("a IS NULL").count() == 0
+        out = aggregate_event_bound_window(df, ToEventWindowBounds(False, "b", False, timedelta(0)))
+        return [r["a"] for r in out.orderBy("timestamp").collect()]
+
+    assert a_counts("") == a_counts("0") == [0, 1, 0, 0]
