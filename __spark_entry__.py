@@ -512,19 +512,6 @@ def q_temporal_window_fwd(spark, sf_dir):
     )
 
 
-def q_temporal_window_chunked(spark, sf_dir):
-    """T1 via the skew-mitigation path (operators/skew.py): halo-chunked
-    evaluation over (subject, time-chunk) — same semantics as
-    temporal_window_fwd, so it shares that oracle shape; a hot subject
-    spreads across span/chunk parallel tasks."""
-    from aces_spark.operators.skew import aggregate_temporal_window_chunked
-
-    df = _pred_df(spark, sf_dir, _plain(["purchase", "error", "click"]))
-    return aggregate_temporal_window_chunked(
-        df, TemporalWindowBounds(True, timedelta(hours=24), True, None), chunk=timedelta(days=7)
-    )
-
-
 def q_temporal_window_bwd(spark, sf_dir):
     """T1: backward 6h window (negative size), open left endpoint."""
     df = _pred_df(spark, sf_dir, _plain(["purchase", "error"]))
@@ -545,19 +532,6 @@ def q_event_bound_fwd(spark, sf_dir):
     """E1: row → next purchase event, closed both."""
     df = _pred_df(spark, sf_dir, _plain(["purchase", "error", "click"]))
     return aggregate_event_bound_window(df, ToEventWindowBounds(True, "purchase", True, None))
-
-
-def q_event_bound_chunked(spark, sf_dir):
-    """E1 via the skew-mitigation path (operators/skew.py): chunked
-    cumsums + chunk-local boundary fill with cross-chunk carry — same
-    semantics as event_bound_fwd, so it shares that oracle shape; a hot
-    subject's kernel stages spread across span/chunk parallel tasks."""
-    from aces_spark.operators.skew import aggregate_event_bound_window_chunked
-
-    df = _pred_df(spark, sf_dir, _plain(["purchase", "error", "click"]))
-    return aggregate_event_bound_window_chunked(
-        df, ToEventWindowBounds(True, "purchase", True, None), chunk=timedelta(days=7)
-    )
 
 
 def q_event_bound_bwd(spark, sf_dir):
@@ -3174,7 +3148,7 @@ def q_adamic_adar(spark, sf_dir):
 #   Tier 1 — never-green/new queries lead (they must debut with a row).
 #   Tier 2 — stalest-green next: queries whose last green row is oldest
 #            (round-robin; after this round the current tail rotates up).
-#   Tier 3 — pinned core: cohort_flagship + the 8 kernel queries are
+#   Tier 3 — pinned core: cohort_flagship + the 6 kernel queries are
 #            always inside the top 50 (they guard the §2 heart).
 #   Tier 4 — remaining green queries, freshest-green LAST (the tail past
 #            position 50 is always the most recently re-verified set).
@@ -3625,14 +3599,12 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "minhash_signatures": q_minhash_signatures,
     "minhash_lsh_pairs": q_minhash_lsh_pairs,
     "simhash_groups": q_simhash_groups,
-    # --- tier 3 (pinned core): flagship + 8 kernels, always in the top 50 ---
+    # --- tier 3 (pinned core): flagship + 6 kernels, always in the top 50 ---
     "cohort_flagship": q_cohort_flagship,
     "temporal_window_fwd": q_temporal_window_fwd,
-    "temporal_window_chunked": q_temporal_window_chunked,
     "temporal_window_bwd": q_temporal_window_bwd,
     "temporal_window_offset": q_temporal_window_offset,
     "event_bound_fwd": q_event_bound_fwd,
-    "event_bound_chunked": q_event_bound_chunked,
     "event_bound_bwd": q_event_bound_bwd,
     "event_bound_record_end": q_event_bound_record_end,
     # --- r4 overflow (displaced by the 7 late-r8 debuts): lead tier 2 in r9 ---
@@ -3795,9 +3767,8 @@ _R10_ORDER = [
     "predicate_value_range", "derived_and_or", "text_quality", "stratified_sample",
     "dsir_selection", "kmeans_clusters", "entity_resolution", "semantic_dedup",
     "phrase_search", "distinctive_terms", "ivf_append_topk", "rank_normalize",
-    "cohort_flagship", "temporal_window_fwd", "temporal_window_chunked",
-    "temporal_window_bwd", "temporal_window_offset", "event_bound_fwd", "event_bound_chunked",
-    "event_bound_bwd", "event_bound_record_end",
+    "cohort_flagship", "temporal_window_fwd", "temporal_window_bwd",
+    "temporal_window_offset", "event_bound_fwd", "event_bound_bwd", "event_bound_record_end",
     "sorted_neighborhood", "time_weighted_avg", "coverage_select",
     "domain_temperature_mix", "containment_pairs", "hard_negatives", "winsorized_values",
     "random_projection", "bpe_merges", "bpe_encode_tokens", "tfidf_features",
@@ -4038,10 +4009,6 @@ WINDOW w AS (PARTITION BY subject_id ORDER BY timestamp
              RANGE BETWEEN CURRENT ROW AND INTERVAL 24 HOURS FOLLOWING)
 """
 
-    # the chunked kernel is bit-identical to the plain one, so it shares
-    # the temporal_window_fwd oracle shape
-    sql["temporal_window_chunked"] = sql["temporal_window_fwd"]
-
     sql["temporal_window_bwd"] = f"""
 WITH pred AS ({pred_pe})
 SELECT subject_id, timestamp,
@@ -4094,10 +4061,6 @@ SELECT subject_id, timestamp,
   CAST(COALESCE(bnd_cum_c - cum_c + click, 0) AS BIGINT) AS click
 FROM b
 """
-
-    # the chunked event-bound kernel is bit-identical to the plain one, so
-    # it shares the event_bound_fwd oracle shape
-    sql["event_bound_chunked"] = sql["event_bound_fwd"]
 
     # E1 backward, closed left: bound = latest boundary at ts <= row ts
     # (self allowed); sum = cum(row) - (cum(bnd) - own(bnd)) - own(row).

@@ -41,10 +41,9 @@ def pack_sequences(
     token sum; everything else is row-local arithmetic. For a single
     dominant source (heavy skew — one stream's whole history would
     serialize into one task), pass ``chunk_docs`` to switch to the
-    chunked-cumsum formulation (the ``operators/skew.py`` pattern keyed
-    by ``key_col`` blocks instead of time): intra-chunk window sums plus
-    a broadcast exclusive prefix over per-chunk totals — bit-identical
-    output, intra-stream parallelism ``|stream| / chunk_docs``.
+    chunked-cumsum formulation (keyed by ``key_col`` blocks): intra-chunk
+    window sums plus a broadcast exclusive prefix over per-chunk totals —
+    bit-identical output, intra-stream parallelism ``|stream| / chunk_docs``.
     """
     toks_col = token_count(F.col(text_col)).alias("n_tokens")
     base = df.select(part_col, key_col, toks_col)

@@ -16,8 +16,9 @@ kernels:
 
 Spark-first design decisions (vs the reference's physical plan):
 
-* The temporal kernel is a single ``RANGE BETWEEN`` frame over
-  ``unix_micros(timestamp)`` — open endpoints become exact ±1 μs bound
+* The temporal kernel sums each row's ``[lo, hi]`` μs range over
+  ``unix_micros(timestamp)`` as the difference of two growing ``RANGE``
+  frames (``_range_sum``) — open endpoints become exact ±1 μs bound
   shrinks (timestamps are μs precision; the reference itself relies on the
   same trick at ``src/aces/aggregate.py:1013-1017``).
 * The event-bound kernel reproduces the reference's
@@ -40,10 +41,11 @@ Spark-first design decisions (vs the reference's physical plan):
   are written as ``n PRECEDING`` / ``n FOLLOWING`` with ``L`` literals.
 
 At 100 TB: all per-subject windows are embarrassingly parallel after the
-single hash exchange; no broadcast, no driver materialization. Skewed
-subjects (one subject with millions of events) serialize within one task —
-acceptable for EHR-shaped data (≤ ~100k events/subject); see
-ARCHITECTURE.md for the mitigation plan.
+single hash exchange; no broadcast, no driver materialization. Every frame
+is growing (``UNBOUNDED PRECEDING`` to a bound) or whole-partition, which
+Spark evaluates in one pass, so a subject costs its sort plus linear work.
+A subject with millions of events still runs within one task; a 1M-event
+subject takes seconds (ARCHITECTURE.md "Skew").
 """
 
 from __future__ import annotations
@@ -100,8 +102,26 @@ def _over(frame: str, desc: bool = False) -> str:
 
 
 def _range_sum(c: str, lo: int, hi: int) -> str:
-    """``c`` summed over the range frame ``[lo, hi]`` μs, 0 when empty."""
-    return f"coalesce(sum({ident(c)}) {_over(f'RANGE BETWEEN {_bound(lo)} AND {_bound(hi)}')}, 0L)"
+    """``c`` summed over the rows ``[lo, hi]`` μs from the current row, 0
+    when empty.
+
+    Written as ``S(hi) - S(lo - 1)``, where ``S(x)`` sums the subject's rows
+    up to ``x`` μs from the current row. ``S`` is a growing frame, which
+    Spark evaluates incrementally; a sliding ``RANGE BETWEEN lo AND hi``
+    frame is re-aggregated row by row, quadratic in the rows it holds. Both
+    frames share the partition and order spec, so they land in one
+    ``Window`` operator. An empty frame (``lo > hi``) is a literal zero:
+    Spark rejects a start above the end, and ``S(hi) - S(lo - 1)`` is not
+    zero once ``lo - 1 > hi``.
+    """
+    if lo > hi:
+        return "0L"
+
+    def upto(x: int) -> str:
+        frame = _over(f"RANGE BETWEEN UNBOUNDED PRECEDING AND {_bound(x)}")
+        return f"coalesce(sum({ident(c)}) {frame}, 0L)"
+
+    return f"({upto(hi)} - {upto(lo - 1)})"
 
 
 def _temporal_outputs(
@@ -112,13 +132,7 @@ def _temporal_outputs(
     lo, hi = bounds.spark_range_bounds
     off_us = td_to_us(bounds.offset)
     ws_us = td_to_us(bounds.window_size)
-    if lo > hi:
-        # degenerate window (e.g. zero-length with an open endpoint): frame
-        # is empty for every row; Spark rejects start > end frames, so emit
-        # literal zeros directly.
-        sums = {f"{prefix}{c}": f"CAST(0 AS {PRED_CNT_TYPE})" for c in pred_cols}
-    else:
-        sums = {f"{prefix}{c}": f"CAST({_range_sum(c, lo, hi)} AS {PRED_CNT_TYPE})" for c in pred_cols}
+    sums = {f"{prefix}{c}": f"CAST({_range_sum(c, lo, hi)} AS {PRED_CNT_TYPE})" for c in pred_cols}
     ts_us = ident(TS_US)
     return {
         f"{prefix}timestamp_at_start": f"timestamp_micros({ts_us} + {off_us}L)",
@@ -153,6 +167,8 @@ def aggregate_temporal_window(
     The reference special-cases ≤1-row inputs because Polars ``rolling``
     cannot handle them (``aggregate.py:10-88``); Spark window functions
     handle 1-row partitions natively so no special case exists here.
+    Rows with a null timestamp get zero sums; ``query()`` drops them
+    before any kernel runs.
     """
     if not isinstance(endpoint_expr, TemporalWindowBounds):
         endpoint_expr = TemporalWindowBounds(*endpoint_expr)
@@ -303,9 +319,7 @@ def _event_bound_fills(
     interval = _offset_interval_bounds(mode, closed, offset)
     if interval is not None:
         lo, hi = interval
-        stage1.update(
-            {f"{tp}off_{c}": "0L" if lo > hi else _range_sum(c, lo, hi) for c in pred_cols}
-        )
+        stage1.update({f"{tp}off_{c}": _range_sum(c, lo, hi) for c in pred_cols})
     if not isinstance(boundary_expr, Column):
         stage1[f"{tp}bexpr"] = _boundary_sql(boundary_expr)
     df = df.selectExpr("*", *_as(stage1))

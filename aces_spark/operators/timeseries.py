@@ -189,9 +189,8 @@ def asof_join_chunked(
     """Skew-safe backward as-of join: bit-identical to
     :func:`asof_join(direction="backward")` but the growing fill runs
     within ``(on, time-chunk)`` partitions — parallelism scales with
-    ``|keys| × |chunks|`` instead of ``|keys|``, the same escape hatch the
-    event-bound kernel uses (``operators/skew.py``) for the
-    one-dominant-key corpus where a single subject holds millions of rows.
+    ``|keys| × |chunks|`` instead of ``|keys|``: the escape hatch for the
+    one-dominant-key corpus where a single key holds millions of rows.
 
     Stitching: each chunk's unmatched prefix takes its match from a tiny
     per-``(on, chunk)`` side relation (the last right payload of every

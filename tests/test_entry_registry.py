@@ -15,11 +15,9 @@ DRIVER_CAP = 50
 PINNED = {
     "cohort_flagship",
     "temporal_window_fwd",
-    "temporal_window_chunked",
     "temporal_window_bwd",
     "temporal_window_offset",
     "event_bound_fwd",
-    "event_bound_chunked",
     "event_bound_bwd",
     "event_bound_record_end",
 }

@@ -68,19 +68,51 @@ def test_event_bound_kernel_single_exchange_and_no_joins(pred_df):
     assert not any("Join" in k for k in counts), counts
 
 
-@pytest.mark.parametrize("mode_name", ["fwd", "bwd"])
-def test_event_bound_kernel_no_shrinking_frames(pred_df, mode_name):
-    """Neither kernel direction may emit an unboundedfollowing range frame:
-    Spark evaluates those by re-scanning the rest of the partition for every
-    row (O(n²) per subject — a skewed 100k-event subject stalls its task).
-    The backward fill is expressed as a growing frame over the negated key
-    instead; this guard keeps it that way."""
-    end_event = "is_a" if mode_name == "fwd" else "-is_a"
-    out = aggregate_event_bound_window(
-        pred_df, ToEventWindowBounds(True, end_event, True, None)
+def _hf_query(spark, tmp_path):
+    from test_fused import _hf_readmission_cfg
+
+    from aces_spark import query
+
+    df = spark.createDataFrame(
+        [(1, datetime(2020, 1, 1), 1, 1, 1, 1)],
+        "subject_id long, timestamp timestamp, admission long, discharge long, "
+        "HF_dx long, _ANY_EVENT long",
     )
-    plan = _plan(out).lower()
-    assert "unboundedfollowing$()" not in plan.replace(" ", ""), plan
+    return query(_hf_readmission_cfg(tmp_path), df, validate_uniqueness=False)
+
+
+_KERNELS = {
+    "temporal": lambda df: aggregate_temporal_window(
+        df, TemporalWindowBounds(False, timedelta(hours=-6), True, timedelta(minutes=5))
+    ),
+    "event_fwd": lambda df: aggregate_event_bound_window(
+        df, ToEventWindowBounds(True, "is_a", True, None)
+    ),
+    "event_bwd": lambda df: aggregate_event_bound_window(
+        df, ToEventWindowBounds(True, "-is_a", True, None)
+    ),
+    "event_fwd_offset": lambda df: aggregate_event_bound_window(
+        df, ToEventWindowBounds(True, "is_a", False, timedelta(hours=1))
+    ),
+    "event_bwd_offset": lambda df: aggregate_event_bound_window(
+        df, ToEventWindowBounds(False, "-is_a", True, timedelta(hours=-1))
+    ),
+}
+
+
+@pytest.mark.parametrize("case", [*_KERNELS, "hf_query"])
+def test_kernel_range_frames_are_growing(spark, pred_df, tmp_path, case):
+    """Every window frame, in both kernels and in the HF plan, must start at
+    UNBOUNDED PRECEDING. Spark evaluates such a growing frame in one pass;
+    it re-aggregates a sliding frame (``lo, hi``) row by row and re-scans a
+    shrinking one (``x, UNBOUNDED FOLLOWING``) per row, O(n²) per subject
+    either way. A range sum is a difference of two growing frames, and the
+    backward fill a growing frame over the key in descending order."""
+    out = _hf_query(spark, tmp_path) if case == "hf_query" else _KERNELS[case](pred_df)
+    plan = _plan(out).lower().replace(" ", "")
+    frames = re.findall(r"specifiedwindowframe\((rangeframe|rowframe),([^,]+),", plan)
+    assert any(kind == "rangeframe" for kind, _ in frames), plan
+    assert all(start == "unboundedpreceding$()" for _, start in frames), frames
 
 
 def test_decontaminate_broadcasts_benchmark(spark):
